@@ -5,9 +5,8 @@ COMPACT JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 goes to BENCH_DETAIL.json next to this file (the driver's stdout capture
 truncates long lines, which nulled round 1's parsed bench).
 
-Materialization uses the noop sink (full pipeline execution, no driver
-collect overhead). Session build time is excluded; one warmup query runs
-first so JVM/codegen startup doesn't pollute query timings.
+Session, warm-up and noop-sink timing come from tools/measure.py, shared
+with the profiling tools. Session build and warm-up time are excluded.
 """
 
 from __future__ import annotations
@@ -15,16 +14,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_extensions_spark.queries import registry  # noqa: E402
-from spark_extensions_spark.session import get_spark  # noqa: E402
-
-# Nothing skipped: every registered query (incl. the deterministic
-# sign-plane ann_lsh) runs in the headline wall-clock.
-SKIP: set[str] = set()
+from tools.measure import session, time_noop, warm_up  # noqa: E402
 
 # Re-measure thresholds shared with tools/bench_diff.py's gate so the
 # rows the differ would flag are exactly the rows that get a second,
@@ -62,58 +56,8 @@ def remeasure_contended(
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # Size shuffle width to the bench machine: the suite's per-query cost
-    # at bench SF is dominated by task scheduling, and AQE re-derives
-    # parallelism from data size on a real cluster anyway.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        "bench", extra_conf={"spark.sql.shuffle.partitions": cpus}
-    )
-
-    # warmup: absorb JVM/codegen startup, executor package shipping
-    # (addPyFile zip), parquet footer reads AND the data pages
-    # themselves before timing queries — count() alone is satisfied
-    # from footer statistics, so without a full materialization the
-    # first queries to touch each table pay cold page-cache disk reads
-    # whenever the OS evicted the fixtures (observed as a spurious
-    # 2-3x on the first-in-order queries after an unrelated heavy job)
-    from spark_extensions_spark.session import ALL_TABLES, load_tables
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-    tables = load_tables(spark, sf_dir, *ALL_TABLES)
-    for t in tables.values():
-        # noop write reads every data page once; also initializes the
-        # noop commit machinery before the first timed query
-        t.write.format("noop").mode("overwrite").save()
-    # spin up the Python/Arrow UDF worker pool once: the first
-    # pandas-UDF query otherwise pays worker-fork + Arrow codec init
-    # for all 32 cores (observed as a spurious 2-3x on whichever
-    # pandas query runs first in registry order)
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import functions as F
-
-    spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # and the streaming machinery (checkpoint manager, state store
-    # provider classes) — first streaming query pays it otherwise
-    from spark_extensions_spark.streaming import (
-        read_stream_parquet,
-        run_available_now,
-    )
-    import tempfile
-
-    warm_dir = tempfile.mkdtemp(prefix="bench_warm_")
-    spark.range(64).select(
-        (F.col("id") % 4).alias("k"), F.col("id").alias("v")
-    ).write.mode("overwrite").parquet(warm_dir)
-    run_available_now(
-        read_stream_parquet(spark, warm_dir)
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n")),
-        output_mode="complete",
-        state_partitions=4,
-    )
+    spark = session("bench")
+    warm_up(spark, sf_dir)
 
     # De-positioned timing order (VERDICT r7 #4): time the suite in a
     # FIXED md5(name) order decoupled from registry order. Rotation
@@ -132,16 +76,10 @@ def main() -> int:
     by_name = {q.name: q for q in registry()}
 
     def run_one(name: str) -> float:
-        t0 = time.time()
-        by_name[name].spark(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.time() - t0, 3)
+        return round(time_noop(lambda: by_name[name].spark(spark, sf_dir)), 3)
 
     timings: dict[str, float] = {}
     for q in sorted(registry(), key=lambda q: _bench_order(q.name)):
-        if q.name in SKIP:
-            continue
         timings[q.name] = run_one(q.name)
 
     # Self-defending re-measure pass (VERDICT r8 #3): a contended bench
@@ -181,10 +119,7 @@ def main() -> int:
     worst10 = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
+    with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(
             {
                 "sf": sf,

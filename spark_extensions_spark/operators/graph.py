@@ -989,13 +989,16 @@ def bfs_oracle_sql(
     """DuckDB twin of :func:`bfs_layers`: fixed rounds unrolled.
 
     ``edges_sql`` must produce DISTINCT canonical ``src < dst`` pairs;
-    ``seeds_sql`` a one-column ``node`` relation.
+    ``seeds_sql`` a one-column ``node`` relation (duplicates allowed).
     """
     parts = [
         f"WITH e0 AS ({edges_sql})",
         "sym AS (SELECT src, dst FROM e0 "
         "UNION ALL SELECT dst, src FROM e0)",
-        f"d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM ({seeds_sql}))",
+        # seeds deduplicated like bfs_layers' seed set: with rounds=0
+        # nothing below regroups d0, so a duplicate would reach the output
+        "d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM "
+        f"(SELECT DISTINCT node FROM ({seeds_sql})))",
     ]
     for i in range(1, rounds + 1):
         prev = f"d{i-1}"
@@ -1086,41 +1089,6 @@ def link_predict(
             ).alias("jaccard_e6"),
         )
     )
-
-
-def link_predict_oracle_sql(
-    table: str, group_col: str, item_col: str, min_common: int = 2
-) -> str:
-    """DuckDB twin of :func:`link_predict` over the co-occurrence graph
-    of ``item_col`` sharing ``group_col`` (same edge construction as
-    :func:`degree_oracle_sql`)."""
-    edges = cooccurrence_edges_sql(table, group_col, item_col)
-    return f"""
-    WITH lp_e AS ({edges}),
-    lp_nb AS (
-      SELECT src AS node, dst AS nbr FROM lp_e
-      UNION ALL SELECT dst, src FROM lp_e
-    ),
-    lp_deg AS (SELECT node, COUNT(*) AS deg FROM lp_nb GROUP BY 1),
-    lp_common AS (
-      SELECT a.node AS id_a, b.node AS id_b, COUNT(*) AS common_neighbors
-      FROM lp_nb a JOIN lp_nb b ON a.nbr = b.nbr AND a.node < b.node
-      GROUP BY 1, 2
-    ),
-    lp_cand AS (
-      SELECT c.* FROM lp_common c
-      LEFT JOIN lp_e e ON e.src = c.id_a AND e.dst = c.id_b
-      WHERE e.src IS NULL AND c.common_neighbors >= {min_common}
-    )
-    SELECT c.id_a, c.id_b,
-           CAST(c.common_neighbors AS BIGINT) AS common_neighbors,
-           CAST(FLOOR(c.common_neighbors
-                / CAST(da.deg + db.deg - c.common_neighbors AS DOUBLE)
-                * 1e6 + 0.5) AS BIGINT) AS jaccard_e6
-    FROM lp_cand c
-    JOIN lp_deg da ON da.node = c.id_a
-    JOIN lp_deg db ON db.node = c.id_b
-    """
 
 
 def link_predict_anchored(

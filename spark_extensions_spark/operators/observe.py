@@ -40,11 +40,6 @@ class MetricPoint:
         return self._obs.get
 
 
-def instrument(df: DataFrame, point: MetricPoint, *metrics: Column) -> DataFrame:
-    """Attach a metric point; returns the same DataFrame for chaining."""
-    return point.attach(df, *metrics)
-
-
 def run_noop(df: DataFrame) -> None:
     """Drive the plan end-to-end with the built-in ``noop`` sink — a
     full distributed execution with zero output (the standard way to

@@ -856,16 +856,6 @@ def ivf_probe_expr(
     )
 
 
-def ivf_dist_duck(eq_sql: str, cq: list[int]) -> str:
-    """DuckDB twin of one :func:`ivf_dists_expr` term (exact integer
-    squared L2 via list_zip; BIGINT in → exact sum)."""
-    arr = "[" + ",".join(str(int(v)) for v in cq) + "]"
-    return (
-        f"CAST(list_sum(list_transform(list_zip({eq_sql}, {arr}), "
-        f"p -> (p.list_1 - p.list_2) * (p.list_1 - p.list_2))) AS BIGINT)"
-    )
-
-
 def ann_ivf_topk_det(
     corpus: DataFrame,
     queries: DataFrame,

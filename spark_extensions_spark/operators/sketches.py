@@ -619,6 +619,75 @@ def bloom_bits(
 _BLOOM_LITERAL_MAX_M = 1 << 24
 
 
+def _with_bloom_maybe(
+    df: DataFrame, hist_df: DataFrame, key_col: str, d: int, m: int
+) -> DataFrame:
+    """``df`` plus a boolean ``__bpf_maybe``: all ``d`` probe bits of
+    ``key_col`` are set in the Bloom filter over ``hist_df.key_col``
+    (False for NULL keys). Also carries the ``__bpf_*`` probe columns;
+    callers select what they keep.
+
+    Up to ``_BLOOM_LITERAL_MAX_M`` bits the set-bit table is folded into
+    packed 64-bit words carried as ONE single-row map, attached by a
+    1-row broadcast nested-loop join: the whole filter costs one scan of
+    the history and one tiny broadcast per batch, with no driver
+    collect. Above it the single mask row would be outsized, so the
+    probe joins each bit lane onto the broadcast bit set instead.
+    """
+    from spark_extensions_spark.operators.dedup import hash64_expr
+
+    bits = bloom_bits(hist_df, key_col, d=d, m=m)
+    probed = df
+    for i in range(d):
+        probed = probed.withColumn(
+            f"__bpf_b{i}",
+            F.expr(
+                f"pmod({hash64_expr(f_concat(i, key_col))}, {m})"
+            ).cast("int"),
+        )
+    if m <= _BLOOM_LITERAL_MAX_M:
+        words = bits.groupBy(
+            F.shiftright(F.col("bit"), 6).alias("w")
+        ).agg(F.expr("bit_or(shiftleft(1L, bit & 63))").alias("word"))
+        mask_row = words.agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("w", "word"))
+            ).alias("__bpf_mask")
+        )
+        all_hit = " AND ".join(
+            f"(shiftright(element_at(__bpf_mask,"
+            f" shiftright(__bpf_b{i}, 6)), __bpf_b{i} & 63) & 1) = 1"
+            for i in range(d)
+        )
+        # NULL keys hash to NULL bits, and unset words are absent from
+        # the map (element_at → NULL): the join path yields no match
+        # (False) for both, so the mask path coalesces NULL to False
+        return probed.join(F.broadcast(mask_row)).withColumn(
+            "__bpf_maybe", F.expr(f"coalesce({all_hit}, false)")
+        )
+    # all-d-bits membership via d broadcast left joins onto the bit set
+    # (a left_semi per bit would drop rows; the boolean is needed)
+    for i in range(d):
+        probed = probed.join(
+            F.broadcast(
+                bits.select(
+                    F.col("bit").alias(f"__bpf_b{i}"),
+                    F.lit(1).alias(f"__bpf_hit{i}"),
+                )
+            ),
+            f"__bpf_b{i}",
+            "left",
+        )
+    return probed.withColumn(
+        "__bpf_maybe",
+        sum(
+            (F.col(f"__bpf_hit{i}").isNotNull()).cast("int")
+            for i in range(d)
+        )
+        == d,
+    )
+
+
 def bloom_prefilter_dedup(
     new_df: DataFrame,
     hist_df: DataFrame,
@@ -652,73 +721,11 @@ def bloom_prefilter_dedup(
     ``_BLOOM_LITERAL_MAX_M`` bits the single mask row would be
     outsized, so oversized filters keep the per-bit broadcast probe.
     """
-    from spark_extensions_spark.operators.dedup import hash64_expr
-
-    bits = bloom_bits(hist_df, key_col, d=d, m=m)
-    probe_bits = [
-        F.expr(f"pmod({hash64_expr(f_concat(i, key_col))}, {m})")
-        .cast("int")
-        .alias(f"b{i}")
-        for i in range(d)
-    ]
-    new_keyed = new_df.select(
+    flagged = _with_bloom_maybe(new_df, hist_df, key_col, d, m).select(
         F.col(id_col).alias("id"),
         F.col(key_col).alias("__k"),
-        *probe_bits,
+        F.col("__bpf_maybe").alias("maybe_dup"),
     )
-    if m <= _BLOOM_LITERAL_MAX_M:
-        # fold the set-bit table into packed 64-bit words and carry
-        # them as ONE single-row map attached by a 1-row broadcast
-        # nested-loop join: the whole filter costs one scan of the
-        # history (the d-broadcast probe re-ran it per bit lane) and
-        # one tiny broadcast per batch, with no driver collect
-        words = bits.groupBy(
-            F.shiftright(F.col("bit"), 6).alias("w")
-        ).agg(F.expr("bit_or(shiftleft(1L, bit & 63))").alias("word"))
-        mask_row = words.agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("w", "word"))
-            ).alias("__mask")
-        )
-        all_hit = " AND ".join(
-            f"(shiftright(element_at(__mask, shiftright(b{i}, 6)),"
-            f" b{i} & 63) & 1) = 1"
-            for i in range(d)
-        )
-        # NULL keys hash to NULL bits, and unset words are absent from
-        # the map (element_at → NULL): the join path yields no match
-        # (False) for both, so the mask path coalesces NULL to False
-        flagged = new_keyed.join(F.broadcast(mask_row)).select(
-            "id",
-            "__k",
-            F.expr(f"coalesce({all_hit}, false)").alias("maybe_dup"),
-        )
-    else:
-        # all-d-bits membership via d broadcast left joins onto the bit
-        # set (a left_semi per bit would drop rows; the boolean is needed)
-        cur = new_keyed
-        for i in range(d):
-            cur = cur.join(
-                F.broadcast(
-                    bits.select(
-                        F.col("bit").alias(f"b{i}"),
-                        F.lit(1).alias(f"__hit{i}"),
-                    )
-                ),
-                f"b{i}",
-                "left",
-            )
-        flagged = cur.select(
-            "id",
-            "__k",
-            (
-                sum(
-                    (F.col(f"__hit{i}").isNotNull()).cast("int")
-                    for i in range(d)
-                )
-                == d
-            ).alias("maybe_dup"),
-        )
     hist_keys = hist_df.select(
         F.col(key_col).alias("__k"), F.lit(1).alias("__in_hist")
     ).distinct()
@@ -762,66 +769,7 @@ def bloom_prefilter_fresh(
     join while keeping the flag form's row set bit-identical (pinned
     by a pytest equivalence test).
     """
-    from spark_extensions_spark.operators.dedup import hash64_expr
-
-    if m <= _BLOOM_LITERAL_MAX_M:
-        bits = bloom_bits(hist_df, key_col, d=d, m=m)
-        words = bits.groupBy(
-            F.shiftright(F.col("bit"), 6).alias("w")
-        ).agg(F.expr("bit_or(shiftleft(1L, bit & 63))").alias("word"))
-        mask_row = words.agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("w", "word"))
-            ).alias("__bpf_mask")
-        )
-        probed = new_df
-        for i in range(d):
-            probed = probed.withColumn(
-                f"__bpf_b{i}",
-                F.expr(
-                    f"pmod({hash64_expr(f_concat(i, key_col))}, {m})"
-                ).cast("int"),
-            )
-        all_hit = " AND ".join(
-            f"(shiftright(element_at(__bpf_mask,"
-            f" shiftright(__bpf_b{i}, 6)), __bpf_b{i} & 63) & 1) = 1"
-            for i in range(d)
-        )
-        probed = probed.join(F.broadcast(mask_row)).withColumn(
-            "__bpf_maybe", F.expr(f"coalesce({all_hit}, false)")
-        )
-    else:
-        # oversized filters keep the per-bit broadcast probe (the mask
-        # row would be outsized) — same shape as the flag form's else
-        # branch, inlined so the batch still flows through once
-        bits = bloom_bits(hist_df, key_col, d=d, m=m)
-        probed = new_df
-        for i in range(d):
-            probed = probed.withColumn(
-                f"__bpf_b{i}",
-                F.expr(
-                    f"pmod({hash64_expr(f_concat(i, key_col))}, {m})"
-                ).cast("int"),
-            )
-        for i in range(d):
-            probed = probed.join(
-                F.broadcast(
-                    bits.select(
-                        F.col("bit").alias(f"__bpf_b{i}"),
-                        F.lit(1).alias(f"__bpf_hit{i}"),
-                    )
-                ),
-                f"__bpf_b{i}",
-                "left",
-            )
-        probed = probed.withColumn(
-            "__bpf_maybe",
-            sum(
-                (F.col(f"__bpf_hit{i}").isNotNull()).cast("int")
-                for i in range(d)
-            )
-            == d,
-        )
+    probed = _with_bloom_maybe(new_df, hist_df, key_col, d, m)
     hist_keys = hist_df.select(F.col(key_col).alias("__bpf_k")).distinct()
     cols = new_df.columns
     definite = probed.where(~F.col("__bpf_maybe")).select(*cols)

@@ -10,9 +10,10 @@ deployment while staying correct on ``local[N]`` test runs:
 - ``spark.sql.session.timeZone=UTC`` — deterministic timestamp semantics
   (matches the DuckDB oracle's naive timestamps).
 - Arrow on for any pandas-UDF path.
-- Shuffle partitions sized to the local core count for tests; a real
-  cluster deployment overrides via ``extra_conf`` (AQE coalescing makes
-  over-provisioning cheap).
+- Shuffle partitions pinned at 32, whatever the local core count; the
+  bench and profiling tools set ``$SPARK_GRAFT_CPUS`` instead, and a
+  real cluster deployment overrides via ``extra_conf`` (AQE coalescing
+  makes over-provisioning cheap).
 """
 
 from __future__ import annotations

@@ -68,28 +68,6 @@ def _read_header(buf: bytes) -> tuple[dict, bytes, int]:
     return meta, sync, pos + 16
 
 
-def _iter_records(buf: bytes, decoder, codec: str):
-    mv = memoryview(buf)
-    meta, sync, pos = _read_header(buf)
-    del meta
-    total = len(buf)
-    while pos < total:
-        count, pos = _read_long(mv, pos)
-        size, pos = _read_long(mv, pos)
-        block = bytes(mv[pos : pos + size])
-        pos += size
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)
-        if bytes(mv[pos : pos + 16]) != sync:
-            raise ValueError("Avro container corrupt: sync marker mismatch")
-        pos += 16
-        bmv = memoryview(block)
-        bpos = 0
-        for _ in range(count):
-            rec, bpos = decoder(bmv, bpos)
-            yield rec
-
-
 def _local_path(uri: str) -> str:
     if uri.startswith("file:"):
         p = uri[5:]

@@ -791,8 +791,7 @@ def _memoized_placement(num_partitions, max_entries: int = 1 << 20):
 
 def _write_staged(root, topic, task_id, buckets):
     """Write one uniquely named staged parquet file per touched
-    partition from {pid: [(key, value, ts_us), ...]} buckets; shared by
-    the Row- and Arrow-iterator staging paths."""
+    partition from {pid: [(key, value, ts_us), ...]} buckets."""
     import uuid
 
     import pyarrow as pa
@@ -820,30 +819,14 @@ def _write_staged(root, topic, task_id, buckets):
     return staged
 
 
-def _stage_rows(root, topic, num_partitions, task_id, rows):
-    """Executor side: bucket rows by placement and stage one uniquely
-    named file per touched partition; returns
-    [(pid, staged_path, count), ...]. Offsets are NOT assigned here —
-    only the single driver-side commit does that, so task retries /
-    speculative duplicates are shed at commit (last message per task
-    wins) and a failed job publishes nothing."""
-    place = _memoized_placement(num_partitions)
-    buckets: dict[int, list] = {}
-    for row in rows:
-        k = row["key"]
-        k = None if k is None else bytes(k)
-        v = bytes(row["value"])
-        # Row.__contains__ matches VALUES, not field names — use __fields__
-        ts = row["ts_us"] if "ts_us" in row.__fields__ else 0
-        buckets.setdefault(place(k), []).append((k, v, int(ts or 0)))
-    return _write_staged(root, topic, task_id, buckets)
-
-
 def _stage_batches(root, topic, num_partitions, task_id, batches):
-    """Arrow twin of :func:`_stage_rows` for the DataSourceArrowWriter
-    fast path: the same placement, per-partition (key, value) sort and
-    staged-file layout, but rows arrive as RecordBatches — no pickled
-    Row objects, binary columns unwrap to ``bytes`` in one call."""
+    """Executor side of the DataSourceArrowWriter sinks: bucket the
+    RecordBatches' rows by placement and stage one uniquely named file
+    per touched partition; returns [(pid, staged_path, count), ...].
+    Offsets are NOT assigned here — only the single driver-side commit
+    does that, so task retries / speculative duplicates are shed at
+    commit (last message per task wins) and a failed job publishes
+    nothing. Binary columns unwrap to ``bytes`` in one call."""
     place = _memoized_placement(num_partitions)
     buckets: dict[int, list] = {}
     for b in batches:
@@ -856,14 +839,27 @@ def _stage_batches(root, topic, num_partitions, task_id, batches):
             tss = [0] * b.num_rows
         for k, v, ts in zip(keys, vals, tss):
             if v is None:
-                # match the Row path, which fails on bytes(None): a
-                # NULL value must not silently stage as a parquet null
-                # or surface later as an opaque sort TypeError
+                # a NULL value must not silently stage as a parquet
+                # null or surface later as an opaque sort TypeError
                 raise ValueError(
                     "filekafka message 'value' must not be NULL"
                 )
             buckets.setdefault(place(k), []).append((k, v, int(ts or 0)))
     return _write_staged(root, topic, task_id, buckets)
+
+
+def _staged_by_pid(messages) -> dict[int, list[str]]:
+    """{pid: sorted staged paths} from the writers' commit messages
+    (a failed task's message is None)."""
+    by_pid: dict[int, list[str]] = {}
+    for m in messages:
+        if m is None:
+            continue
+        for pid, path, _ in m.staged:
+            by_pid.setdefault(pid, []).append(path)
+    for pid in by_pid:
+        by_pid[pid].sort()
+    return by_pid
 
 
 def _commit_marker_path(root, topic, pid, batch_id) -> str:
@@ -995,24 +991,12 @@ class FileKafkaDataSource(DataSource):
                 )
 
             def commit(self, messages):
-                by_pid: dict[int, list[str]] = {}
-                for m in messages:
-                    if m is None:
-                        continue
-                    for pid, path, _ in m.staged:
-                        by_pid.setdefault(pid, []).append(path)
-                for pid in by_pid:
-                    by_pid[pid].sort()
-                _publish_staged(self.root, self.topic, by_pid)
+                _publish_staged(
+                    self.root, self.topic, _staged_by_pid(messages)
+                )
 
             def abort(self, messages):
-                by_pid: dict[int, list[str]] = {}
-                for m in messages:
-                    if m is None:
-                        continue
-                    for pid, path, _ in m.staged:
-                        by_pid.setdefault(pid, []).append(path)
-                _remove_staged(by_pid)
+                _remove_staged(_staged_by_pid(messages))
 
         return _BatchWriter()
 
@@ -1047,14 +1031,7 @@ class FileKafkaDataSource(DataSource):
                 )
 
             def commit(self, messages, batchId):
-                by_pid: dict[int, list[str]] = {}
-                for m in messages:
-                    if m is None:
-                        continue
-                    for pid, path, _ in m.staged:
-                        by_pid.setdefault(pid, []).append(path)
-                for pid in by_pid:
-                    by_pid[pid].sort()
+                by_pid = _staged_by_pid(messages)
                 # batchId keys the idempotence check: a replayed batch
                 # (crash between sink commit and Spark's commit-log
                 # write) publishes nothing the second time
@@ -1063,13 +1040,7 @@ class FileKafkaDataSource(DataSource):
                 )
 
             def abort(self, messages, batchId):
-                by_pid: dict[int, list[str]] = {}
-                for m in messages:
-                    if m is None:
-                        continue
-                    for pid, path, _ in m.staged:
-                        by_pid.setdefault(pid, []).append(path)
-                _remove_staged(by_pid)
+                _remove_staged(_staged_by_pid(messages))
 
         return _StreamWriter()
 

@@ -28,16 +28,16 @@ Recovery semantics table (also in NOTES.md):
 
 import os
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import spark_extensions_spark.operators.incremental as inc
 import spark_extensions_spark.sources.filekafka as fk
 
 
-def _stage(root, topic, parts, rows, task_id=0):
-    return fk._stage_rows(root, topic, parts, task_id, rows)
+def _stage(root, topic, parts, batch, task_id=0):
+    return fk._stage_batches(root, topic, parts, task_id, [batch])
 
 
 def _staged_by_pid(staged):
@@ -59,11 +59,16 @@ def _read_topic(spark, root, topic):
     )
 
 
-def _rows(ids):
-    return [
-        Row(key=f"k{i}".encode(), value=f"v{i}".encode(), ts_us=i)
-        for i in ids
-    ]
+def _arrow_batch(ids):
+    """The Arrow batch a filekafka writer task receives."""
+    ids = list(ids)
+    return pa.RecordBatch.from_pydict(
+        {
+            "key": pa.array([f"k{i}".encode() for i in ids], pa.binary()),
+            "value": pa.array([f"v{i}".encode() for i in ids], pa.binary()),
+            "ts_us": pa.array(ids, pa.int64()),
+        }
+    )
 
 
 # ---------------------------------------------------------------------
@@ -75,14 +80,14 @@ def test_sink_crash_between_stage_and_publish(spark, tmp_path):
     root, topic = str(tmp_path), "t"
     fk.ensure_topic(root, topic, 2)
     # phase 1 completes, the driver dies before phase 2 (commit)
-    staged = _stage(root, topic, 2, _rows(range(8)))
+    staged = _stage(root, topic, 2, _arrow_batch(range(8)))
     assert staged, "staging produced files"
     # ATOMICITY: staged files are invisible to every reader
     assert _read_topic(spark, root, topic).count() == 0
     # CONVERGENCE: the retried job re-stages and publishes once;
     # abort of the dead attempt removes its orphans
     fk._remove_staged(_staged_by_pid(staged))
-    staged2 = _stage(root, topic, 2, _rows(range(8)))
+    staged2 = _stage(root, topic, 2, _arrow_batch(range(8)))
     fk._publish_staged(root, topic, _staged_by_pid(staged2))
     out = _read_topic(spark, root, topic).collect()
     assert sorted(bytes(r["value"]) for r in out) == sorted(
@@ -93,7 +98,7 @@ def test_sink_crash_between_stage_and_publish(spark, tmp_path):
 def test_sink_crash_between_partition_publishes(spark, tmp_path, monkeypatch):
     root, topic = str(tmp_path), "t"
     fk.ensure_topic(root, topic, 2)
-    staged = _stage(root, topic, 2, _rows(range(16)))
+    staged = _stage(root, topic, 2, _arrow_batch(range(16)))
     by_pid = _staged_by_pid(staged)
     assert len(by_pid) == 2, "need both partitions touched"
 
@@ -134,7 +139,7 @@ def test_sink_crash_between_partition_publishes(spark, tmp_path, monkeypatch):
 def test_sink_crash_between_segment_and_marker(spark, tmp_path, monkeypatch):
     root, topic = str(tmp_path), "t"
     fk.ensure_topic(root, topic, 1)
-    staged = _stage(root, topic, 1, _rows(range(5)))
+    staged = _stage(root, topic, 1, _arrow_batch(range(5)))
     by_pid = _staged_by_pid(staged)
 
     def dying(*a, **kw):
@@ -151,7 +156,7 @@ def test_sink_crash_between_segment_and_marker(spark, tmp_path, monkeypatch):
     assert fk._batch_published(root, topic, 0, 9), "tag detected"
 
     # CONVERGENCE: replaying the batch publishes nothing new
-    staged2 = _stage(root, topic, 1, _rows(range(5)))
+    staged2 = _stage(root, topic, 1, _arrow_batch(range(5)))
     fk._publish_staged(root, topic, _staged_by_pid(staged2), batch_id=9)
     assert _read_topic(spark, root, topic).count() == 5, "no duplicates"
 
@@ -162,11 +167,11 @@ def test_sink_whole_batch_replay_after_commit(spark, tmp_path):
     # already published it
     root, topic = str(tmp_path), "t"
     fk.ensure_topic(root, topic, 2)
-    staged = _stage(root, topic, 2, _rows(range(10)))
+    staged = _stage(root, topic, 2, _arrow_batch(range(10)))
     fk._publish_staged(root, topic, _staged_by_pid(staged), batch_id=4)
     assert _read_topic(spark, root, topic).count() == 10
 
-    staged2 = _stage(root, topic, 2, _rows(range(10)))
+    staged2 = _stage(root, topic, 2, _arrow_batch(range(10)))
     fk._publish_staged(root, topic, _staged_by_pid(staged2), batch_id=4)
     out = _read_topic(spark, root, topic).collect()
     assert len(out) == 10, "replayed batch publishes nothing"

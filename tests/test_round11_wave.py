@@ -32,18 +32,38 @@ def test_k_core_residual_degrees_on_doubled_layout(spark):
 
 def test_bfs_layers_dedups_duplicate_seeds(spark):
     """ADVICE r10: duplicate seed rows must not duplicate output rows
-    (the frontier form unions seeds into the output verbatim)."""
-    from spark_extensions_spark.operators.graph import bfs_layers
+    (the frontier form unions seeds into the output verbatim), and the
+    DuckDB twin must agree on the same duplicated seeds — at rounds=0
+    no round regroups the seed set, so only a deduplicated oracle seed
+    gives the operator's rows."""
+    import duckdb
+
+    from spark_extensions_spark.operators.graph import (
+        bfs_layers,
+        bfs_oracle_sql,
+    )
 
     seeds = spark.createDataFrame([(1,), (1,), (1,)], "node bigint")
-    out = bfs_layers(
-        _edges(spark, [(1, 2), (2, 3)]), seeds, rounds=3
-    ).collect()
+    edges = _edges(spark, [(1, 2), (2, 3)])
+    out = bfs_layers(edges, seeds, rounds=3).collect()
     assert sorted((r["node"], r["dist"]) for r in out) == [
         (1, 0),
         (2, 1),
         (3, 2),
     ]
+    con = duckdb.connect()
+    for rounds in (0, 3):
+        oracle = con.execute(
+            bfs_oracle_sql(
+                "SELECT * FROM (VALUES (1::BIGINT, 2::BIGINT),"
+                " (2::BIGINT, 3::BIGINT)) t(src, dst)",
+                "SELECT * FROM (VALUES (1::BIGINT), (1::BIGINT),"
+                " (1::BIGINT)) t(node)",
+                rounds=rounds,
+            )
+        ).fetchall()
+        got = bfs_layers(edges, seeds, rounds=rounds).collect()
+        assert sorted(oracle) == sorted(map(tuple, got)), rounds
 
 
 def test_bfs_layers_empty_frontier_early_exit_output_unchanged(spark):

@@ -3,15 +3,15 @@ form of the per-round sf1 scale audit (VERDICT r6 "What's wrong" #3
 asked for this to be a standing wrap gate; the previous rounds ran an
 ad-hoc chunked loop that never landed in tools/).
 
-Runs every registry query against ``sf_dir`` with the same warmup and
-noop-sink timing discipline as bench.py, restarting the session every
+Runs every registry query against ``sf_dir`` with bench.py's warmup and
+noop-sink timing (tools/measure.py), restarting the session every
 ``chunk`` queries (long single sessions accumulate JVM/codegen/state
 overhead that poisons tail timings at 10x data), and writes the full
 timing map as JSON.
 
 Usage:
   python tools/bench_full.py [sf_dir] [--out BENCH_sf1_full.json]
-      [--chunk 60] [--skip-over N_SECONDS_BUDGET]
+      [--chunk 60]
 """
 
 from __future__ import annotations
@@ -19,26 +19,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_extensions_spark.queries import registry  # noqa: E402
-from spark_extensions_spark.session import (  # noqa: E402
-    ALL_TABLES,
-    get_spark,
-    load_tables,
-)
-
-
-def _warm(spark, sf_dir: str) -> None:
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in load_tables(spark, sf_dir, *ALL_TABLES).values():
-        t.write.format("noop").mode("overwrite").save()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(cpus * 4).repartition(cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+from tools.measure import session, time_noop, warm_up  # noqa: E402
 
 
 def main() -> int:
@@ -56,22 +41,13 @@ def main() -> int:
     qs = registry()
     for start in range(0, len(qs), chunk):
         batch = qs[start : start + chunk]
-        spark = get_spark(
-            f"bench_full_{start}",
-            extra_conf={
-                "spark.sql.shuffle.partitions": os.environ.get(
-                    "SPARK_GRAFT_CPUS", "32"
-                )
-            },
-        )
-        _warm(spark, sf_dir)
+        spark = session(f"bench_full_{start}")
+        warm_up(spark, sf_dir)
         for q in batch:
-            t0 = time.time()
             try:
-                q.spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                timings[q.name] = round(time.time() - t0, 3)
+                timings[q.name] = round(
+                    time_noop(lambda: q.spark(spark, sf_dir)), 3
+                )
             except Exception as e:  # noqa: BLE001 — record, keep going
                 errors[q.name] = f"{type(e).__name__}: {e}"[:300]
             print(

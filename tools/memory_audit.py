@@ -4,13 +4,12 @@ Every prior audit measured wall-time under a 128 GiB heap; at 100× the
 binding constraint is MEMORY. This tool re-runs the largest-state
 families at sf1 inside a session capped at ``$SPARK_GRAFT_DRIVER_MEM``
 (pass 4g; local-mode driver heap holds all executor threads) with the
-UI status API enabled, and records per-family:
+session's status store (tools/measure.py) read back, and records
+per-family:
 
 - wall seconds,
-- shuffle memory/disk spill bytes (REST /stages, summed over the
-  query's stages),
-- JVM peak heap across executors (REST /executors
-  peakMemoryMetrics.JVMHeapMemory).
+- shuffle memory/disk spill bytes, summed over the query's stages,
+- JVM peak heap across executors (``peakMemoryMetrics.JVMHeapMemory``).
 
 Completion without OOM is the gate; the spill column is the evidence
 that the operators DEGRADE to disk instead of dying when state
@@ -35,13 +34,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_extensions_spark.queries import registry  # noqa: E402
-from spark_extensions_spark.session import get_spark  # noqa: E402
+from tools.measure import JobStore, measure, session  # noqa: E402
 
 # the largest-state families: window frames, collect_list/listagg,
 # graph fixed-rounds, ANN codebooks/kmeans, pack/chunk, CDC fold,
@@ -64,43 +61,23 @@ AUDIT_QUERIES = [
 ]
 
 
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(base + path, timeout=10) as r:
-        return json.loads(r.read())
-
-
 def run_one(name: str, sf_dir: str) -> int:
     """Child-process entry: run one query in a fresh capped JVM and
     print its metrics row as the single MEMROW: line."""
-    spark = get_spark(
-        f"memory-audit-{name}",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4057"},
-    )
-    base = "http://127.0.0.1:4057/api/v1"
-    app_id = _rest(base, "/applications")[0]["id"]
-    by_name = {q.name: q for q in registry()}
-    t0 = time.time()
-    by_name[name].spark(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    wall = round(time.time() - t0, 2)
-    mem_spill = disk_spill = 0
-    for s in _rest(base, f"/applications/{app_id}/stages"):
-        mem_spill += s.get("memoryBytesSpilled", 0)
-        disk_spill += s.get("diskBytesSpilled", 0)
-    peak = 0
-    for e in _rest(base, f"/applications/{app_id}/executors"):
-        pmm = e.get("peakMemoryMetrics") or {}
-        peak = max(peak, pmm.get("JVMHeapMemory", 0))
+    spark = session(f"memory-audit-{name}")
+    q = {q.name: q for q in registry()}[name]
+    run = measure(spark, lambda: q.spark(spark, sf_dir))
     print(
         "MEMROW:"
         + json.dumps(
             {
                 "query": name,
-                "wall_s": wall,
-                "memory_spill_mb": round(mem_spill / 1e6, 1),
-                "disk_spill_mb": round(disk_spill / 1e6, 1),
-                "jvm_peak_heap_mb": round(peak / 1e6, 1),
+                "wall_s": round(run.wall, 2),
+                "memory_spill_mb": round(run.total("memory_spill") / 1e6, 1),
+                "disk_spill_mb": round(run.total("disk_spill") / 1e6, 1),
+                "jvm_peak_heap_mb": round(
+                    JobStore(spark).peak_heap_bytes() / 1e6, 1
+                ),
                 "err": None,
             }
         ),

@@ -1,99 +1,86 @@
-"""Per-job wall-clock decomposition of one registered query.
+"""Per-job wall-clock decomposition of registered queries.
 
 Optimization work needs to know WHERE a query's seconds go before
-touching it (guide §1): this runs one query noop-sinked in a fresh
-session with the UI status API on, then prints every Spark job the
-query ran — duration, stage count, task count, shuffle read/write
-bytes, and the job group/description — plus the total python-side
-wall. Iterative/streaming queries show their per-round/per-batch job
-structure directly.
+touching it (guide §1). After bench.py's warm-up, in one session at the
+bench's plan width, each named query runs noop-sinked once cold
+(JVM/codegen warmup charged to run 1) and ``--repeat`` more times warm.
+For the last run it prints the wall, the job-time sum and the driver
+gap (wall outside every job: Python, commits, collects), then every job
+that took at least ``--min`` seconds — duration, task and stage count,
+shuffle read/write, spill and description. Iterative/streaming queries
+show their per-round/per-batch job structure directly.
 
-Run:  python tools/profile_query.py <query> [sf_dir] [--repeat N]
+A job whose duration is large while its task count is far below the
+core count is leaving cores idle — either a single-row-group scan doing
+heavy row-local work on one task (ensure_parallelism territory) or an
+AQE bytes-coalesced exchange feeding a compute-heavy stage (guide §2:
+AQE sizes partitions by bytes and cannot see downstream row expansion).
 
-The query runs once cold (JVM/codegen warmup charged to run 1) and
-``--repeat`` more times warm; jobs listed are the LAST run's only,
-so the decomposition reflects steady-state cost, not first-run
-compilation.
+Run:  SPARK_GRAFT_SF_DIR=<fixture dir> \\
+          python tools/profile_query.py NAME... [--top N] [--repeat N] [--min S]
+
+``--top N`` adds the N slowest queries of BENCH_DETAIL.json.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+from perfbench.tracing import MIB  # noqa: E402
 from spark_extensions_spark.queries import registry  # noqa: E402
-from spark_extensions_spark.session import get_spark  # noqa: E402
-
-_PORT = "4099"
-
-
-def _rest(path: str):
-    base = f"http://127.0.0.1:{_PORT}/api/v1"
-    with urllib.request.urlopen(base + path, timeout=10) as r:
-        return json.loads(r.read())
+from tools.measure import measure, session, warm_up  # noqa: E402
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    name = args[0]
-    sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
-    repeat = 1
-    for a in sys.argv[1:]:
-        if a.startswith("--repeat"):
-            repeat = int(a.split("=")[1]) if "=" in a else 2
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", metavar="NAME")
+    ap.add_argument("--top", type=int, default=0)
+    ap.add_argument("--repeat", type=int, default=1)
+    ap.add_argument("--min", type=float, default=0.0)
+    args = ap.parse_args()
+    names = args.names
+    if args.top:
+        with open(os.path.join(ROOT, "BENCH_DETAIL.json")) as fh:
+            detail = json.load(fh)["queries"]
+        names += sorted(detail, key=lambda k: -detail[k])[: args.top]
 
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     by_name = {q.name: q for q in registry()}
-    q = by_name[name]
-    spark = get_spark(
-        f"profile-{name}",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": _PORT},
-    )
-    # warm the table caches / codegen identically to bench.py
-    from spark_extensions_spark.session import ALL_TABLES, load_tables
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in load_tables(spark, sf_dir, *ALL_TABLES).values():
-        t.write.format("noop").mode("overwrite").save()
-
-    walls = []
-    first_job = 0
-    for i in range(1 + repeat):
-        jobs_before = _rest("/applications")[0]["id"]  # ensure app up
-        before_ids = {j["jobId"] for j in _rest(f"/applications/{jobs_before}/jobs")}
-        t0 = time.time()
-        q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls.append(round(time.time() - t0, 3))
-        app_id = _rest("/applications")[0]["id"]
-        all_jobs = _rest(f"/applications/{app_id}/jobs")
-        run_jobs = sorted(
-            (j for j in all_jobs if j["jobId"] not in before_ids),
-            key=lambda j: j["jobId"],
-        )
-    print(f"walls: {walls}  (run1 = cold)")
-    total = 0.0
-    from datetime import datetime
-
-    def _ts(s):
-        return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
-
-    rows = []
-    for j in run_jobs:
-        dur = _ts(j["completionTime"]) - _ts(j["submissionTime"])
-        total += dur
-        rows.append((dur, j))
-    for dur, j in rows:
-        desc = (j.get("description") or j["name"])[:110]
+    spark = session("profile")
+    warm_up(spark, sf_dir)
+    for name in names:
+        try:
+            runs = [
+                measure(spark, lambda: by_name[name].spark(spark, sf_dir))
+                for _ in range(1 + args.repeat)
+            ]
+        except Exception as exc:  # noqa: BLE001 — keep sweeping
+            print(f"{name}: ERROR {type(exc).__name__}: {exc}", flush=True)
+            continue
+        run = runs[-1]
+        walls = ", ".join(f"{r.wall:.3f}" for r in runs)
+        print(f"{name}: walls [{walls}] s (first = cold)")
+        for j in run.jobs:
+            if j["seconds"] < args.min:
+                continue
+            print(
+                f"  {j['seconds']:7.3f}s  tasks={j['tasks']:4d} "
+                f"stages={j['stages']:2d}  shuffle r/w "
+                f"{j['shuffle_read'] / MIB:.1f}/{j['shuffle_write'] / MIB:.1f}"
+                f" MiB  spill {j['disk_spill'] / MIB:.1f} MiB  "
+                f"{' '.join(j['desc'].split())[:80]}"
+            )
         print(
-            f"  {dur:7.3f}s  tasks={j['numCompletedTasks']:4d} "
-            f"stages={len(j['stageIds']):2d}  {desc}"
+            f"  job-time sum: {run.job_s:.3f}s over {len(run.jobs)} jobs "
+            f"(gap = driver/python time: {run.gap_s:.3f}s)",
+            flush=True,
         )
-    print(f"job-time sum: {total:.3f}s over {len(run_jobs)} jobs "
-          f"(gaps = driver/python time: {walls[-1] - total:.3f}s)")
     return 0
 
 

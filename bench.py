@@ -1,12 +1,14 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 COMPACT JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {<worst 10 only>}, "sf": ...} — the full per-query timing map
+"queries": {<worst 10 only>}, "sf": ..., "env": {...}} — the full per-query timing map
 goes to BENCH_DETAIL.json next to this file (the driver's stdout capture
 truncates long lines, which nulled round 1's parsed bench).
 
 Session, warm-up and noop-sink timing come from tools/measure.py, shared
 with the profiling tools. Session build and warm-up time are excluded.
+``env`` records what the timings ran on (see :func:`environment`), so a
+run is read against its own master, width, cores and versions.
 """
 
 from __future__ import annotations
@@ -51,6 +53,36 @@ def remeasure_contended(
         if t > min_seconds and t / b > ratio:
             out[name] = {"first": t, "remeasured": run_one(name)}
     return out
+
+
+def environment(spark) -> dict:
+    """Master, session widths, visible cores, versions and git commit."""
+    import subprocess
+
+    import duckdb
+    import pyspark
+
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "--short=12", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            timeout=10,
+        ).stdout.strip() or None
+    except (OSError, subprocess.TimeoutExpired):
+        sha = None
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "nproc": len(os.sched_getaffinity(0)),
+        "pyspark": pyspark.__version__,
+        "duckdb": duckdb.__version__,
+        "python": sys.version.split()[0],
+        "git_sha": sha,
+    }
 
 
 def main() -> int:
@@ -147,6 +179,7 @@ def main() -> int:
                 "median_query_sec": median,
                 "n_remeasured": len(remeasured),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "env": environment(spark),
             }
         )
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _any_changed(left: str, right: str, cols: list[str]) -> Column:
@@ -350,8 +351,9 @@ def _read_state_version_dir(spark, version_dir: str) -> DataFrame:
     """Load one committed state version: a bucketed version carries a
     ``manifest.json`` mapping key-hash buckets to parquet dirs (touched
     buckets live under this version, untouched ones are shared with
-    earlier versions — bucket-level copy-on-write); a legacy version is
-    a plain full-snapshot parquet dir."""
+    earlier versions — bucket-level copy-on-write) and the state's
+    schema, which the read uses instead of inferring it in a Spark job;
+    a legacy version is a plain full-snapshot parquet dir."""
     import json as _json
     import os
 
@@ -363,7 +365,7 @@ def _read_state_version_dir(spark, version_dir: str) -> DataFrame:
     paths = sorted(manifest["buckets"].values())
     if not paths:
         return spark.createDataFrame([], manifest["schema"])
-    return spark.read.parquet(*paths)
+    return spark.read.schema(manifest["schema"]).parquet(*paths)
 
 
 def _read_manifest(version_dir: str) -> dict | None:
@@ -425,6 +427,10 @@ def apply_cdc_batch(
     shared between versions by reference, so time travel keeps working
     and storage grows with churn, not snapshots.
 
+    The rewrite runs at most ``defaultParallelism`` tasks, one per core
+    rather than one per touched bucket. Each bucket hashes to exactly
+    one task, so every bucket dir still gets one file.
+
     The state is never updated in place, so a crashed apply leaves the
     previous version live — the same publish-by-rename discipline as
     the filekafka sink commit. Size ``n_buckets`` so one bucket's
@@ -477,7 +483,11 @@ def apply_cdc_batch(
             for b in touched
             if str(b) in base_manifest["buckets"]
         ]
-        cur_touched = spark.read.parquet(*paths) if paths else None
+        cur_touched = (
+            spark.read.schema(base_manifest["schema"]).parquet(*paths)
+            if paths
+            else None
+        )
 
     if cur_touched is None:
         new_touched = upserts
@@ -492,8 +502,12 @@ def apply_cdc_batch(
         # this every task emits a file into every touched bucket dir
         # (tasks x buckets small files per batch — at 1000 executors x
         # 1000s of buckets that is millions of files); clustered, each
-        # bucket gets ~one file per batch
-        .repartition(max(len(touched), 1), F.col("__bucket"))
+        # bucket gets one file per batch. A bucket hashes to exactly
+        # one task, so one task per core (not per bucket) keeps that
+        .repartition(
+            min(spark.sparkContext.defaultParallelism, max(len(touched), 1)),
+            F.col("__bucket"),
+        )
         .write.partitionBy("__bucket")
         .parquet(data_dir)
     )
@@ -511,11 +525,10 @@ def apply_cdc_batch(
                 )
     manifest = {
         "n_buckets": n_buckets,
-        "schema": ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in batch_df.schema.fields
-            if f.name != op_col
-        ),
+        # DDL quotes column names, so names with spaces read back
+        "schema": StructType(
+            [f for f in batch_df.schema.fields if f.name != op_col]
+        ).toDDL(),
         "buckets": buckets,
     }
     os.makedirs(version, exist_ok=True)

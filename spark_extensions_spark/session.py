@@ -14,6 +14,13 @@ deployment while staying correct on ``local[N]`` test runs:
   bench and profiling tools set ``$SPARK_GRAFT_CPUS`` instead, and a
   real cluster deployment overrides via ``extra_conf`` (AQE coalescing
   makes over-provisioning cheap).
+- On a local master, Python workers fork from the ``_pydaemon`` module
+  (``spark.python.daemon.module``). Up to Python 3.11, each task's
+  ``importlib.invalidate_caches()`` eagerly re-reads the central
+  directory of every zip on the worker's path (``pyspark.zip``, the
+  Spark jars): about 0.3 s a task. The daemon's zip importers re-read an
+  archive only when it changed. Local masters only: executors elsewhere
+  may not have this package, so other masters keep Spark's daemon.
 """
 
 from __future__ import annotations
@@ -43,6 +50,9 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(
     app_name: str = "spark_extensions_spark",
     master: str | None = None,
@@ -68,6 +78,13 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
+        # Python workers fork from a daemon whose zip importers skip
+        # unchanged archives (_pydaemon.py); the PYTHONPATH lets it
+        # import this package whatever the driver's cwd
+        conf.setdefault(
+            "spark.python.daemon.module", "spark_extensions_spark._pydaemon"
+        )
+        conf.setdefault("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -131,8 +148,8 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     import tempfile
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
+    root = _PACKAGE_ROOT
+    pkg_dir = os.path.join(root, "spark_extensions_spark")
     zpath = os.path.join(
         tempfile.gettempdir(), f"spark_extensions_spark_pkg_{os.getpid()}.zip"
     )
@@ -146,11 +163,37 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     spark._sx_pyfiles_added = True
 
 
+def _read_parquet_memo(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)`` with the session's schema memo (see
+    :func:`load_tables`); a path that cannot be stat'ed is inferred."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    memo = getattr(spark, "_sx_schemas", None)
+    if memo is None:
+        memo = spark._sx_schemas = {}
+    if key in memo:
+        return spark.read.schema(memo[key]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[key] = df.schema
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Read the driver's parquet fixtures and register temp views.
 
     Returns a dict name -> DataFrame. Scans stay lazy; Catalyst prunes
     columns/filters down to the parquet reader.
+
+    Inferring a parquet schema starts a Spark job, so each table's
+    inferred ``StructType`` is kept on the session, keyed by
+    ``(path, st_mtime_ns, st_size)``: a repeat load of an unchanged file
+    reads with that schema and starts no job, and a rewritten file is
+    inferred afresh. Only the schema is kept, never the DataFrame: each
+    load is a new relation with its own expression ids, so a self-join
+    of two loads stays a join of two sides.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
@@ -164,7 +207,7 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
 
     out = {}
     for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = _read_parquet_memo(spark, os.path.join(sf_dir, f"{name}.parquet"))
         # TIMESTAMP(NANOS) columns arrive as long (nanosAsLong); restore
         # them to timestamps at microsecond precision (exact division —
         # the fixtures carry at most µs resolution).

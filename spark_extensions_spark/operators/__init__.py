@@ -43,8 +43,6 @@ from spark_extensions_spark.operators.dedup import (
     minhash_jaccard_estimates,
 )
 from spark_extensions_spark.operators.clustering import (
-    kmeans_fit,
-    kmeans_assignments,
     kmeans_fit_det,
     kmeans_assignments_det,
     sample_diverse,
@@ -119,8 +117,6 @@ __all__ = [
     "embedding_neardup_pairs_ivf_det",
     "sorted_neighborhood_pairs",
     "minhash_jaccard_estimates",
-    "kmeans_fit",
-    "kmeans_assignments",
     "kmeans_fit_det",
     "kmeans_assignments_det",
     "sample_diverse",

@@ -4,30 +4,23 @@ sampling.
 Curation pipelines cluster the corpus embedding space and then sample
 per cluster — diversity-aware subsetting ("semantic dedup at the
 cluster level", topic balancing, coverage-weighted mixes). This module
-implements Lloyd's k-means the way it scales on Spark:
+implements Lloyd's k-means the way it scales on Spark, in EXACT integer
+arithmetic over fixed-point quantized vectors, so every iteration is
+bit-reproducible on any engine and partitioning:
 
 - **Init**: the k rows with the smallest ``md5(id)`` — deterministic,
   layout-independent, and uniformly spread over the corpus (no
   ``rand()``, no driver sampling).
-- **Assign** (per iteration): the squared-distance fold to each of the
-  k broadcast centroids is a codegen'd array expression; argmin by
-  ``array_position(dists, array_min(dists))`` (first-min ⇒
-  deterministic tie-break by centroid index). Zero shuffle.
-- **Update**: ``posexplode`` the vectors and aggregate per
-  (cluster, dimension) with DECIMAL-cast sums — exact, order-free, so
-  centroids are identical on any partitioning. The driver receives
-  k × dim numbers per iteration (the centroids), never row data.
+- **Assign** (per iteration): exact int64 squared-L2 argmin against the
+  k centroids, first-min tie-break by centroid index. Zero shuffle.
+- **Update**: per-(cluster, dimension) integer sums in one aggregate,
+  ``floor(double(Σv)/n)`` means. The driver receives k × dim numbers
+  per iteration (the centroids), never row data.
 
-At 100 TB the per-iteration cost is one shuffle of n·dim (cluster,
-dim, value) rows — the same shape MLlib's k-means pays via
-treeAggregate; AQE coalesces the tiny aggregate side. Fixed iteration
-count (no convergence probe) keeps the job graph static and the result
-reproducible.
-
-No SQL oracle (iterative, not expressible without unrolling) — the
-``embedding_kmeans`` query is declared rows-only; correctness is
-pinned by a numpy twin test (same init, same update rule) plus
-invariance tests (partitioning-independence, inertia monotonicity).
+Fixed iteration count (no convergence probe) keeps the job graph static
+and the result reproducible, so the ``embedding_kmeans`` query is
+hash-checked against an unrolled SQL oracle (queries16).
+:func:`sample_diverse` caps every cluster of that assignment.
 
 Reference scope note: the reference has no clustering surface — LLM-
 pipeline extension layer (SURVEY.md §7 M5).
@@ -35,114 +28,10 @@ pipeline extension layer (SURVEY.md §7 M5).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_extensions_spark.operators.sampling import (
-    hash_bucket,
-    stratified_cap,
-)
-
-
-def assign_clusters(
-    vec_col: str, centroids: list[list[float]]
-) -> Column:
-    """Column: index of the nearest centroid (first-min tie-break).
-
-    Vectorized pandas UDF — the deliberate Arrow-batched slow-path
-    exception: k × dim interpreted SQL lambda folds per row are ~100×
-    slower than one numpy distance matrix per batch (the brief's
-    "vectorized Pandas UDF where built-ins genuinely can't express it
-    efficiently" case). numpy argmin takes the first minimum, matching
-    the documented tie-break.
-    """
-    C = np.array(centroids, dtype=np.float64)
-
-    @F.pandas_udf("int")
-    def _assign(s: pd.Series) -> pd.Series:
-        if len(s) == 0:
-            return pd.Series([], dtype="int32")
-        M = np.stack(s.to_numpy()).astype(np.float64)
-        d = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    return _assign(F.col(vec_col))
-
-
-def kmeans_fit(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 8,
-    iters: int = 5,
-) -> list[list[float]]:
-    """Fit k-means; returns the centroid list (k × dim floats).
-
-    Deterministic: hash-min init, fixed ``iters``, decimal-exact
-    update sums (partition-layout-invariant). Empty clusters keep
-    their previous centroid.
-    """
-    seed_rows = (
-        df.select(id_col, vec_col)
-        .withColumn("__h", hash_bucket(id_col, "kmeans", 1 << 60))
-        .orderBy("__h", id_col)
-        .limit(k)
-        .collect()
-    )
-    centroids = [
-        [float(x) for x in r[vec_col]] for r in seed_rows
-    ]
-    # Per-dim sums as k×dim WIDE aggregate columns instead of
-    # posexplode + groupBy(__c, __pos): the explode multiplied the
-    # aggregate's input by dim; one sum column per position keeps the
-    # input at n rows and the identical decimal totals (exact, order-
-    # free) reach the driver as k rows of dim columns.
-    dim = len(centroids[0])
-    aggs = [
-        # float -> double FIRST (exact widening); a direct
-        # float -> decimal cast goes through the float's short
-        # decimal string and silently loses ~1e-8 per element
-        F.sum(
-            F.expr(
-                f"cast(cast({vec_col}[{p}] as double) as decimal(28,12))"
-            )
-        ).alias(f"__s{p}")
-        for p in range(dim)
-    ] + [F.count(F.lit(1)).alias("__n")]
-    for _ in range(iters):
-        sums = (
-            df.select(
-                assign_clusters(vec_col, centroids).alias("__c"),
-                F.col(vec_col),
-            )
-            .groupBy("__c")
-            .agg(*aggs)
-            .collect()
-        )
-        new_centroids = [list(c) for c in centroids]
-        for r in sums:
-            ci, n = int(r["__c"]), int(r["__n"])
-            new_centroids[ci] = [
-                float(r[f"__s{p}"]) / n for p in range(dim)
-            ]
-        centroids = new_centroids
-    return centroids
-
-
-def kmeans_assignments(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 8,
-    iters: int = 5,
-) -> DataFrame:
-    """``(id_col, cluster int)`` for every row, via :func:`kmeans_fit`."""
-    centroids = kmeans_fit(df, id_col, vec_col, k, iters)
-    return df.select(
-        id_col, assign_clusters(vec_col, centroids).alias("cluster")
-    )
+from spark_extensions_spark.operators.sampling import stratified_cap
 
 
 def sample_diverse(
@@ -157,14 +46,9 @@ def sample_diverse(
     most ``cap`` rows per cluster in deterministic hash order — a
     topic-balanced sample instead of a frequency-weighted one."""
     assigned = df.join(
-        kmeans_assignments(df, id_col, vec_col, k, iters), id_col
+        kmeans_assignments_det(df, id_col, vec_col, k, iters), id_col
     )
     return stratified_cap(assigned, "cluster", id_col, cap, salt="diverse")
-
-
-# ---------------------------------------------------------------------
-# Deterministic integer k-means (oracle-checkable)
-# ---------------------------------------------------------------------
 
 
 def kmeans_fit_det(
@@ -191,8 +75,8 @@ def kmeans_fit_det(
       zero, DuckDB floors, and negative sums would diverge.)
     - Empty clusters keep their previous centroid.
 
-    Scale shape identical to :func:`kmeans_fit`: one posexplode
-    shuffle per iteration, k×dim numbers to the driver, never rows.
+    Scale shape: one aggregate shuffle per iteration, k×dim numbers to
+    the driver, never rows.
     """
     import math
 

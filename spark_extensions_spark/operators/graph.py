@@ -13,22 +13,23 @@ within ``diameter`` rounds. Near-dup graphs are overwhelmingly tiny
 dense cliques (diameter 1–2), so 3–5 rounds is typical; each round is
 one join + one groupBy shuffle, both keyed by node id.
 
-Scale notes (100 TB corpus → billions of nodes, shallow components):
-
-- per-round ``localCheckpoint`` truncates the lineage, without which
-  iteration k replans k² joins (the classic iterative-Catalyst trap);
-- convergence is detected distributedly (count of labels that changed
-  this round) — nothing but the scalar count reaches the driver;
-- for adversarially deep graphs (long chains), swap the per-round rule
-  for the large-star/small-star pair of Kiveris et al. ("Connected
-  Components in MapReduce and Beyond", SoCC'14) — same join/groupBy
-  primitives, O(log²) rounds; the default here favors the dedup-clique
-  workload where plain hash-min wins by constant factors.
+The iterative operators (all but pagerank) share one round loop,
+:func:`_iterate`: each round's state is lazily ``localCheckpoint``-ed
+(without truncation iteration k replans k² joins), and a convergence
+test is ONE aggregate over the round's state — the count of labels
+that moved, or the edge-set signature — which is also the job that
+materializes the round; nothing but that scalar row reaches the
+driver. Deep graphs (long chains) take the large-star/small-star pair
+of Kiveris et al. ("Connected Components in MapReduce and Beyond",
+SoCC'14): O(log²) rounds, where hash-min wins by constant factors on
+shallow dedup cliques. LPA, k-core and BFS iterate over one persisted
+layout, :func:`_symmetric`.
 
 Reference scope note: the reference library has no graph surface; this
 belongs to the LLM-data-pipeline extension layer (SURVEY.md §7 M5).
-The DuckDB oracle is a recursive-CTE transitive closure — exact, so the
-operator is fully hash-checked (see queries4.dedup_clusters).
+The DuckDB oracle is a recursive-CTE transitive closure
+(:func:`cc_oracle_sql`) — exact, so both components operators are
+fully hash-checked (see queries4.dedup_clusters).
 """
 
 from __future__ import annotations
@@ -57,6 +58,50 @@ def _maybe_broadcast(df: DataFrame, n_nodes: int) -> DataFrame:
     return F.broadcast(df) if n_nodes <= _BROADCAST_NODES_MAX else df
 
 
+def _iterate(state, step, rounds, probe=None, done=None, name=None):
+    """``state = step(state, r)`` for ``r`` in ``range(rounds)``; each
+    round's state is ``localCheckpoint(eager=False)``-ed, filled by the
+    first job that reads it. With ``probe`` (aggregate columns), the
+    probe over the round's state is the round's one action and
+    ``done(prev, row)`` on the last two probe rows (``prev`` None after
+    round one) ends the loop; running out of rounds then raises."""
+    prev = None
+    for r in range(rounds):
+        state = step(state, r).localCheckpoint(eager=False)
+        if probe is not None:
+            row = tuple(state.agg(*probe).head())
+            if done(prev, row):
+                return state
+            prev = row
+    if probe is not None:
+        raise RuntimeError(f"{name} did not converge in {rounds} rounds")
+    return state
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str, key: str):
+    """``(sym, n_nodes)``: the canonical undirected edge list in both
+    directions as ``(src, dst)``, hash-partitioned by ``key`` ONCE so
+    per-round aggregates on ``key`` run exchange-free (broadcast joins
+    keep the stream side's layout; guide §2.4), and its node count —
+    the action that fills the cache — for :func:`_maybe_broadcast`.
+    Persisted columnar, not checkpointed: the round-10 memory audit saw
+    row-RDD checkpoint blocks (216 MiB/partition at sf1) OOM a 0.5 g/core
+    session, and truncating one distinct of lineage buys nothing."""
+    from pyspark import StorageLevel
+
+    from spark_extensions_spark.session import expansion_width
+
+    e = canonical_edges(edges, src, dst)
+    sym = (
+        e.unionAll(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .repartition(expansion_width(e.sparkSession), key)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return sym, sym.select("src").distinct().count()
+
+
 def connected_components(
     edges: DataFrame,
     src: str,
@@ -71,62 +116,49 @@ def connected_components(
     reach a fixpoint (guards against silent wrong answers on graphs
     deeper than expected — raise the cap or switch algorithms then).
 
-    One Spark action per round: the checkpoint is LAZY and the
-    changed-label aggregate is the action that materializes it — the
-    convergence probe rides the same job instead of re-scanning (an
-    eager checkpoint + separate count would be two actions, and
-    deferring the probe to every N rounds would trade a cheap scalar
-    count for a full redundant propagation round).
+    One Spark action per round (:func:`_iterate`): the count of labels
+    that moved materializes the round's lazy checkpoint. The edge list
+    and initial labels are lazy too, filled by the first round's job.
     """
+    # Checkpointed once: upstream lineage (e.g. an LSH candidate-pair
+    # join) must not be re-executed every round.
     sym = (
         edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
         .union(edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    # Materialize the edge list once: upstream lineage (e.g. an LSH
-    # candidate-pair join) must not be re-executed every round.
-    sym = sym.localCheckpoint(eager=True)
     # Round 0 folds the first propagation into initialization.
     labels = sym.groupBy("node").agg(
         F.least(F.min("nbr"), F.first("node")).alias("component")
     )
-    labels = labels.localCheckpoint(eager=True)
 
-    for it in range(max_iter):
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         # neighbor minimum of current labels
-        nbr_labels = labels.withColumnRenamed("node", "nbr").withColumnRenamed(
-            "component", "nbr_comp"
-        )
         nbr_min = (
-            sym.join(nbr_labels, "nbr", "inner")
-            .groupBy("node")
-            .agg(F.min("nbr_comp").alias("nbr_comp"))
-            .withColumnRenamed("node", "n")
-        )
-        updated = (
-            labels.join(nbr_min, labels["node"] == nbr_min["n"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_comp"), F.col("component"))
-                ).alias("component"),
-                (F.col("nbr_comp") < F.col("component")).alias("__changed"),
+            sym.join(
+                labels.select(
+                    F.col("node").alias("nbr"), F.col("component").alias("c")
+                ),
+                "nbr",
             )
+            .groupBy("node")
+            .agg(F.min("c").alias("c"))
         )
-        # lazy checkpoint: the full-scan aggregate below is the action
-        # that materializes it (and truncates lineage for next round)
-        updated = updated.localCheckpoint(eager=False)
-        changed = updated.agg(
-            F.count_if(F.col("__changed")).alias("c")
-        ).head()["c"]
-        labels = updated.drop("__changed")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "graph deeper than expected — raise max_iter or use "
-        "large-star/small-star"
-    )
+        return labels.join(nbr_min, "node", "left").select(
+            "node",
+            F.least("component", F.coalesce("c", "component")).alias("component"),
+            (F.col("c") < F.col("component")).alias("__changed"),
+        )
+
+    return _iterate(
+        labels,
+        step,
+        max_iter,
+        probe=[F.count_if(F.col("__changed"))],
+        done=lambda _prev, row: row[0] == 0,
+        name="connected_components",
+    ).drop("__changed")
 
 
 def connected_components_star(
@@ -148,30 +180,27 @@ def connected_components_star(
 
     Each round is two shuffle pairs (groupBy min + join per phase) on
     the current edge set; the edge set only shrinks toward the star
-    graph, so per-round cost decreases. Convergence detection rides the
-    same job that materializes the lazy per-round checkpoint (count +
-    order-insensitive hash signature of the edge set).
+    graph, so per-round cost decreases. Converged when the edge set's
+    count and order-insensitive hash signature equal the previous
+    round's — the probe that materializes the round (:func:`_iterate`).
     """
-    # Materialize the raw pair list BEFORE the self-loop filter: both
+    # Checkpoint the raw pair list BEFORE the self-loop filter: both
     # the iteration's edge set AND the final node roster derive from
     # this one checkpoint, so the (potentially expensive) upstream
     # pair-generation lineage executes exactly once — deriving nodes
     # from `edges` directly would re-run it in the final join.
     E0 = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
-    E = E0.filter(F.col("u") != F.col("v"))
+    ).localCheckpoint(eager=False)
     nodes = (
         E0.select(F.col("u").alias("node"))
         .union(E0.select(F.col("v").alias("node")))
         .distinct()
     )
-    # Node-count upper bound (2 per edge) for broadcast gating: the
-    # per-phase min-label tables below are node-sized, and the
-    # checkpointed edge set has no stats, so without a hint both
-    # phase joins plan SMJ and shuffle the EDGE-sized side every
-    # round; broadcasting the label table ships partial-aggregated
-    # node-sized rows instead (the LPA/pagerank recipe, guide §3.1).
+    # Node-count upper bound (2 per edge) gating the broadcast of the
+    # node-sized per-phase min-label tables (checkpointed edges have no
+    # stats, so unhinted joins plan SMJ and shuffle the edge side every
+    # round; guide §3.1). The count is the job that fills E0.
     n_bound = 2 * E0.count()
 
     # one distinct per ROUND (after small_star): intermediate duplicate
@@ -205,33 +234,36 @@ def connected_components_star(
             .distinct()
         )
 
-    prev_sig = None
-    for _ in range(max_iter):
-        E = small_star(large_star(E)).localCheckpoint(eager=False)
+    E = _iterate(
+        E0.filter(F.col("u") != F.col("v")),
+        lambda e, _r: small_star(large_star(e)),
+        max_iter,
         # bit_xor: order-insensitive, overflow-free under ANSI (the
         # edge set is distinct, so xor is a faithful set signature)
-        sig_row = E.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).head()
-        sig = (sig_row["n"], sig_row["h"])
-        if sig == prev_sig:
-            labels = E.select(
-                F.col("u").alias("node"), F.col("v").alias("component")
-            )
-            return (
-                nodes.join(labels, "node", "left")
-                .groupBy("node")
-                .agg(
-                    F.least(
-                        F.min("component"), F.first("node")
-                    ).alias("component")
-                )
-            )
-        prev_sig = sig
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds"
+        probe=[F.count(F.lit(1)), F.bit_xor(F.xxhash64("u", "v"))],
+        done=lambda prev, row: row == prev,
+        name="connected_components_star",
     )
+    labels = E.select(F.col("u").alias("node"), F.col("v").alias("component"))
+    return (
+        nodes.join(labels, "node", "left")
+        .groupBy("node")
+        .agg(F.least(F.min("component"), F.first("node")).alias("component"))
+    )
+
+
+def cc_oracle_sql(edges_sql: str) -> str:
+    """DuckDB twin of both connected-components operators: the exact
+    recursive-CTE transitive closure. ``edges_sql`` selects ``(src,
+    dst)`` pairs; the result is ``(node, component)``."""
+    return f"""
+    WITH RECURSIVE pairs AS ({edges_sql}),
+    edges AS (SELECT src AS a, dst AS b FROM pairs
+              UNION SELECT dst, src FROM pairs),
+    reach(a, b) AS (SELECT a, b FROM edges
+      UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+    SELECT a AS node, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a
+    """
 
 
 PAGERANK_SCALE = 1_000_000_000_000  # 1e12: integer-scaled rank units
@@ -541,15 +573,12 @@ def triangle_count(
 
     Orientation makes the edge list acyclic, so every triangle has
     exactly one "base" edge (its two lowest-order vertices) and is
-    counted exactly once — no wedge materialization.  The previous
-    formulation joined the edge list with itself to enumerate all
-    Σ C(outdeg, 2) wedges and probed the closing edge with a third
-    join; at sf0.1 that materialized 49M wedge join rows for 1.2M
-    edges (one 6 s stage).  Intersecting per-edge neighbor arrays does
-    Σ (outdeg(u)+outdeg(v)) row-local hash work instead — O(m·d̄)
-    versus O(Σ C(d,2)) — and the only data movement is attaching the
-    node-sized adjacency table twice (broadcast while it fits,
-    shuffle joins beyond; the GraphFrames/vertex-cut shape).
+    counted exactly once — no wedge materialization.  Intersecting
+    per-edge neighbor arrays does Σ (outdeg(u)+outdeg(v)) row-local
+    hash work — O(m·d̄) versus the wedge join's O(Σ C(d,2)) — and the
+    only data movement is attaching the node-sized adjacency table
+    twice (broadcast while it fits, shuffle joins beyond; the
+    GraphFrames/vertex-cut shape).
 
     ``degree_ordered=True`` orients each canonical edge from its
     lower-(degree, id) endpoint to the higher one, which caps outdeg —
@@ -572,18 +601,15 @@ def triangle_count(
     from spark_extensions_spark.session import ensure_parallelism
 
     e = canonical_edges(edges, src, dst).localCheckpoint(eager=False)
-    deg = None
+    deg = _degree_table(e)
     if degree_ordered == "auto":
         # Probe over the checkpointed canonical edges (no second
         # distinct).  The degree table is NOT checkpointed here — on a
         # False decision nothing would ever use it again and the pinned
         # cache would just hold executor storage; the ordered path
         # below checkpoints it before its two join branches.
-        deg = _degree_table(e)
         degree_ordered = _wedge_mass_says_order(deg)
     if degree_ordered:
-        if deg is None:
-            deg = _degree_table(e)
         # two rank-attach joins read it — materialize once
         deg = deg.localCheckpoint(eager=False)
         with_d = (
@@ -637,14 +663,10 @@ def degree_distribution(
     # materialize the canonical edges once: both endpoint-union
     # branches embed the caller's full edge construction otherwise
     e = canonical_edges(edges, src, dst).localCheckpoint(eager=False)
-    nodes = e.select(F.col("src").alias("node")).unionAll(
-        e.select(F.col("dst").alias("node"))
-    )
-    deg = nodes.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
     return (
-        deg.groupBy("degree")
+        _degree_table(e)
+        .groupBy(F.col("deg").cast("bigint").alias("degree"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-        .select(F.col("degree").cast("bigint").alias("degree"), "n_nodes")
     )
 
 
@@ -697,45 +719,17 @@ def label_propagation(
     reproducible variant; classic async LPA is run-order dependent).
 
     Per round: one join (labels onto the symmetrized edge list), one
-    (node, label) count aggregate, one max_by argmax per node —
-    labels localCheckpoint-ed per round to truncate lineage (same
-    pattern as connected_components).  Output: (node, community).
+    (node, label) count aggregate, one max_by argmax per node.  The
+    edge list is :func:`_symmetric` partitioned by ``src`` — the node
+    both aggregates group on — so every round runs exchange-free
+    below the broadcast bound; the labels are the :func:`_iterate`
+    state.  Output: (node, community).
     """
-    from pyspark import StorageLevel
+    sym, n_nodes = _symmetric(edges, src, dst, "src")
 
-    e = canonical_edges(edges, src, dst)
-    # persist (columnar, compressed, disk-spilling) instead of
-    # localCheckpoint for the BIG reused input: the round-10 memory
-    # audit showed the deserialized row-RDD checkpoint blocks (216 MiB
-    # /partition at sf1) OOM-ing a 0.5 g/core session during the
-    # per-round join; the columnar cache is ~10× smaller and evicts
-    # to disk cleanly. Lineage above sym is one union — truncation is
-    # only load-bearing for the per-round LABELS, which stay
-    # localCheckpoint-ed below.
-    from spark_extensions_spark.session import expansion_width
-
-    # Hash-partition the persisted edge list by src ONCE: partitioning
-    # by src satisfies the clustering requirement of BOTH per-round
-    # aggregates (groupBy (node,label) and groupBy node, node = src),
-    # and the broadcast label join preserves the stream side's
-    # partitioning — so every round runs exchange-free. One exchange
-    # here replaces 2 × iterations exchanges (guide §2.4).
-    sym = (
-        e.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(expansion_width(e.sparkSession), "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    # the checkpointed labels table has no size stats, so the per-round
-    # join would plan SMJ and re-shuffle sym every round — hint
-    # broadcast while the node set is small (see _BROADCAST_NODES_MAX);
-    # beyond that, repartition sym by dst ONCE here (the checkpoint
-    # preserves the layout) so each round reshuffles only labels.
-    n_nodes = nodes.count()
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(iterations):
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        # labels are node-sized with checkpoint-hidden stats — hint
+        # broadcast below the bound so sym never re-shuffles
         msgs = sym.join(
             _maybe_broadcast(
                 labels.withColumnRenamed("node", "dst"), n_nodes
@@ -749,17 +743,18 @@ def label_propagation(
         # struct ordering — encode as struct(c, negated label).
         # sym is symmetrized, so EVERY node receives ≥1 message — the
         # aggregate's node set is complete and no backfill join with
-        # `nodes` is needed (removing it saves one shuffle per round).
-        labels = (
-            counts.groupBy("node")
-            .agg(
-                F.max_by(
-                    "label",
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl")),
-                ).alias("label")
-            )
-            .localCheckpoint(eager=False)
+        # the node set is needed (removing it saves one shuffle per round).
+        return counts.groupBy("node").agg(
+            F.max_by(
+                "label",
+                F.struct(F.col("c"), (-F.col("label")).alias("nl")),
+            ).alias("label")
         )
+
+    nodes = sym.select(F.col("src").alias("node")).distinct()
+    labels = _iterate(
+        nodes.select("node", F.col("node").alias("label")), step, iterations
+    )
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -814,55 +809,38 @@ def k_core(
     data-dependent round count); callers wanting the true core loop
     until the edge count stops changing.
 
-    The edge list is symmetrized ONCE into ``(node, other)`` rows (both
-    directions of every canonical edge) and hash-partitioned by
-    ``node`` up front: the per-round degree aggregate then groups on
-    the partitioning key (no exchange), and the two node-sized
-    broadcast semi-joins preserve the stream side's layout — every
-    round runs exchange-free, the same one-keyed-layout shape as
-    :func:`label_propagation`/pagerank.  Doubling costs 2m rows once;
-    the previous per-round src/dst endpoint union rebuilt the same 2m
-    rows EVERY round and paid 1-2 exchanges each.  Symmetry makes the
-    prune self-consistent: a ``(a, b)`` row survives iff both
-    endpoints survive, so its mirror ``(b, a)`` survives too and the
-    doubled set stays an exact doubling of the pruned edge set.
-    Output: ``(node, deg)`` for every endpoint surviving all rounds
-    (``deg`` = its residual degree).
+    The :func:`_iterate` state is the surviving :func:`_symmetric`
+    edge list, partitioned by ``src``: the degree aggregate groups on
+    that key and the broadcast semi-joins keep it, so rounds run
+    exchange-free. A row ``(a, b)`` survives iff both endpoints do, so
+    its mirror survives too and the set stays symmetric.  Output:
+    ``(node, deg)`` for every endpoint surviving all rounds (``deg`` =
+    its residual degree).
     """
-    from spark_extensions_spark.session import expansion_width
+    sym, n_nodes = _symmetric(edges, src, dst, "src")
 
-    e = canonical_edges(edges, src, dst)
-    sym = (
-        e.select(F.col("src").alias("node"), F.col("dst").alias("other"))
-        .unionAll(
-            e.select(F.col("dst").alias("node"), F.col("src").alias("other"))
-        )
-        .repartition(expansion_width(e.sparkSession), "node")
-        .localCheckpoint(eager=False)
-    )
-    n_nodes = sym.select("node").distinct().count()
-    for _ in range(rounds):
+    def step(sym: DataFrame, _r: int) -> DataFrame:
         keep = (
-            sym.groupBy("node")
+            sym.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
-            .select("node")
+            .select("src")
         )
         # keep is node-sized with checkpoint-hidden stats — hint
         # broadcast below the bound so the edge list never shuffles
-        sym = (
-            sym.join(_maybe_broadcast(keep, n_nodes), "node", "left_semi")
-            .join(
-                _maybe_broadcast(
-                    keep.withColumnRenamed("node", "other"), n_nodes
-                ),
-                "other",
-                "left_semi",
-            )
-            .localCheckpoint(eager=False)
+        return sym.join(
+            _maybe_broadcast(keep, n_nodes), "src", "left_semi"
+        ).join(
+            _maybe_broadcast(keep.withColumnRenamed("src", "dst"), n_nodes),
+            "dst",
+            "left_semi",
         )
-    return sym.groupBy("node").agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
+
+    return (
+        _iterate(sym, step, rounds)
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
+        .withColumnRenamed("src", "node")
     )
 
 
@@ -917,42 +895,21 @@ def bfs_layers(
     seed set into the output verbatim, so a caller-side duplicate would
     otherwise duplicate output rows — ADVICE r10).
 
-    Per round: one join of the current distance table onto the
-    symmetrized edge list + one min-aggregate — the same O(m)-shuffle
-    iterative shape as :func:`label_propagation`; distances are
-    localCheckpoint-ed per round so lineage stays flat.  Output:
+    The :func:`_iterate` state is one ``(node, dist)`` table. A
+    distance is final the round its node is first reached, so round
+    ``r`` expands only the frontier ``dist == r`` over the
+    :func:`_symmetric` layout partitioned by ``dst`` (the min-aggregate
+    key: no per-round exchange) and anti-joins away reached nodes —
+    O(m) work over all rounds.  An empty frontier adds no row, so
+    rounds past the graph's depth leave the output unchanged.  Output:
     ``(node, dist)`` for every reached node.
     """
-    from spark_extensions_spark.session import expansion_width
+    sym, n_nodes = _symmetric(edges, src, dst, "dst")
 
-    e = canonical_edges(edges, src, dst)
-    # dst-partitioned so each round's frontier-expansion aggregate
-    # reuses the layout (broadcast joins preserve the stream side's
-    # partitioning) — zero per-round exchanges below the broadcast
-    # bound; the checkpoint records the partitioning.
-    sym = (
-        e.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(expansion_width(e.sparkSession), "dst")
-        .localCheckpoint(eager=False)
-    )
-    dist = seeds.select("node").distinct().select(
-        F.col("node"), F.lit(0).cast("bigint").alias("dist")
-    )
-    n_nodes = sym.select("src").distinct().count()
-    # Frontier BFS: a node's distance is FINAL the round it is first
-    # reached (synchronous expansion — later paths are never shorter),
-    # so only the newly reached frontier needs expanding and already-
-    # labeled nodes are dropped by an anti join instead of re-deriving
-    # every node's min over the full reached set each round. Same
-    # (node, dist) output as the min-over-union form; per-round work
-    # falls from O(edges touching everything reached) to O(edges
-    # touching the frontier) — Σ over rounds = O(m) total.
-    frontier = dist
-    for _ in range(rounds):
+    def step(dist: DataFrame, r: int) -> DataFrame:
         # frontier/dist are node-sized with checkpoint-hidden stats —
         # hint broadcast below the bound so the edge list never shuffles
+        frontier = dist.filter(F.col("dist") == r)
         reached = sym.join(
             _maybe_broadcast(
                 frontier.withColumnRenamed("node", "src"), n_nodes
@@ -970,17 +927,13 @@ def bfs_layers(
                 "node",
                 "left_anti",
             )
-            .localCheckpoint(eager=False)
         )
-        # an empty frontier can never add rows — stop instead of
-        # launching join+aggregate+anti-join jobs over empty data for
-        # every remaining round (the isEmpty probe is one cheap job on
-        # the checkpoint being materialized anyway; output unchanged)
-        if new.isEmpty():
-            break
-        dist = dist.unionAll(new).localCheckpoint(eager=False)
-        frontier = new
-    return dist
+        return dist.unionAll(new)
+
+    dist = seeds.select("node").distinct().select(
+        F.col("node"), F.lit(0).cast("bigint").alias("dist")
+    )
+    return _iterate(dist, step, rounds)
 
 
 def bfs_oracle_sql(
@@ -1000,10 +953,13 @@ def bfs_oracle_sql(
         "d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM "
         f"(SELECT DISTINCT node FROM ({seeds_sql})))",
     ]
+    # each round reads the previous one twice: MATERIALIZED keeps the
+    # plan linear in rounds (inlined, it grows 2^rounds — minutes at 10)
     for i in range(1, rounds + 1):
         prev = f"d{i-1}"
         parts.append(
-            f"d{i} AS (SELECT node, CAST(MIN(dist) AS BIGINT) AS dist "
+            f"d{i} AS MATERIALIZED (SELECT node, CAST(MIN(dist) AS BIGINT) "
+            f"AS dist "
             f"FROM (SELECT node, dist FROM {prev} "
             f"UNION ALL "
             f"SELECT sym.dst AS node, {prev}.dist + 1 AS dist "
@@ -1016,6 +972,27 @@ def bfs_oracle_sql(
 # ---------------------------------------------------------------------
 # Common-neighbor link prediction
 # ---------------------------------------------------------------------
+
+
+def _adjacency(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(node, nbr)``: every edge in both directions, as given."""
+    return edges.select(
+        F.col(src).alias("node"), F.col(dst).alias("nbr")
+    ).unionByName(
+        edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
+    )
+
+
+def _degrees(nb: DataFrame):
+    """``(deg, n_nodes)``: the ``(node, deg)`` table of an
+    :func:`_adjacency`, checkpointed so its count and later joins share
+    one aggregation, and the count that gates its broadcast — a |V|-row
+    broadcast fails on a web-scale graph, where the shuffle join is the
+    right plan."""
+    deg = nb.groupBy("node").agg(
+        F.count(F.lit(1)).cast("bigint").alias("deg")
+    ).localCheckpoint(eager=False)
+    return deg, deg.count()
 
 
 def link_predict(
@@ -1041,26 +1018,14 @@ def link_predict(
     non-adjacent pairs with at least ``min_common`` shared neighbors;
     jaccard = common / (deg_a + deg_b − common), e6 fixed point.
     """
-    nb = edges.select(
-        F.col(src).alias("node"), F.col(dst).alias("nbr")
-    ).unionByName(
-        edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-    )
-    deg = nb.groupBy("node").agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
+    nb = _adjacency(edges, src, dst)
+    deg, n_nodes = _degrees(nb)
     pairs = grouped_pair_edges(nb, "nbr", "node", src="id_a", dst="id_b")
     common = pairs.groupBy("id_a", "id_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("common_neighbors")
     )
     # min_common prunes BEFORE the anti/degree joins (it is the
-    # selective predicate); the degree table is node-domain-sized —
-    # broadcast ONLY below _BROADCAST_NODES_MAX (a |V|-row broadcast
-    # fails outright on a web-scale graph; above the bound the shuffle
-    # join is the correct plan). deg is checkpointed so the count
-    # action and the two joins share one aggregation.
-    deg = deg.localCheckpoint(eager=False)
-    n_nodes = deg.count()
+    # selective predicate)
     non_adj = common.filter(F.col("common_neighbors") >= min_common).join(
         edges.select(
             F.col(src).alias("id_a"), F.col(dst).alias("id_b")
@@ -1120,31 +1085,16 @@ def link_predict_anchored(
     ``(anchor, candidate, common_neighbors, jaccard_e6, rank)`` with
     rank ≤ ``top_k``, deterministic tiebreak on candidate id.
     """
-    nb = (
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .unionByName(
-            edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-        )
-        # materialization barrier: the adjacency feeds FOUR consumers
-        # (anchor semi join, witness join, anti join, degrees) — without
-        # it the upstream edge construction re-executes per consumer
-        .localCheckpoint(eager=False)
-    )
-    # degree table is |V| rows — broadcast only below the module bound
-    # (checkpoint shares the aggregation between the count action and
-    # the two score joins; above the bound the shuffle join is right)
-    deg = nb.groupBy("node").agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    ).localCheckpoint(eager=False)
-    n_nodes = deg.count()
+    # materialization barrier: the adjacency feeds FOUR consumers
+    # (anchor semi join, witness join, anti join, degrees) — without
+    # it the upstream edge construction re-executes per consumer
+    nb = _adjacency(edges, src, dst).localCheckpoint(eager=False)
+    deg, n_nodes = _degrees(nb)
     # the anchor set is contractually a served query set, but the
-    # broadcast must not trust the docstring (round-8 verdict #3 —
-    # same latent class as the round-7 degree-broadcast weak): count
-    # it once and refuse beyond the broadcast bound, naming the
-    # alternatives, mirroring hard_negatives
-    # (operators/alignment.py:305-310).
-    # checkpoint shares the (possibly expensive) anchors lineage
-    # between the count action and the broadcast join below
+    # broadcast must not trust the docstring: count it once and refuse
+    # beyond the broadcast bound, mirroring hard_negatives
+    # (operators/alignment.py:305-310); the checkpoint shares the
+    # anchors lineage between the count and the broadcast join
     anchor_set = anchors.select(F.col(node_col).alias("node")).localCheckpoint(
         eager=False
     )
@@ -1306,21 +1256,11 @@ def degree_assortativity(
 
     Output one row: ``(n_pairs, sx, sxx, sxy, r)``.
     """
-    nb = (
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .unionByName(
-            edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-        )
-        # materialization barrier: the degree aggregate and the two
-        # score joins all consume nb, and each union branch embeds the
-        # caller's full edge construction — lazily the co-purchase
-        # pair expansion executed up to four times per run
-        .localCheckpoint(eager=False)
-    )
-    deg = nb.groupBy("node").agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    ).localCheckpoint(eager=False)
-    n_nodes = deg.count()
+    # materialization barrier: the degree aggregate and the two score
+    # joins all consume nb, and each union branch embeds the caller's
+    # full edge construction (lazily it ran up to four times)
+    nb = _adjacency(edges, src, dst).localCheckpoint(eager=False)
+    deg, n_nodes = _degrees(nb)
     sym = (
         nb.join(
             _maybe_broadcast(deg, n_nodes), "node"

@@ -448,18 +448,17 @@ def _kmeans_det_oracle(k: int = 8, iters: int = 3, dim: int = 64) -> str:
 @_register(
     "embedding_kmeans",
     _kmeans_det_oracle(),
-    doc="Distributed k-means over the embedding column, DETERMINISTIC "
-    "integer variant (operators/clustering.py:kmeans_fit_det): "
+    doc="Distributed k-means over the embedding column in DETERMINISTIC "
+    "integer arithmetic (operators/clustering.py:kmeans_fit_det): "
     "md5-picked quantized init, exact int64 squared-L2 argmin "
     "assignment (row-local codegen, zero shuffle), "
     "floor(double(Σv)/n) centroid means (portable: sums < 2^53 are "
     "exact in double and quotients sit ≥1/n from the floor boundary). "
     "Every iteration is bit-reproducible on any engine, so the whole "
     "iterative algorithm is hash-checked against an UNROLLED SQL "
-    "oracle (was rows-only). One posexplode shuffle per iteration; "
-    "driver traffic k*dim numbers, never rows. The float/decimal "
-    "variant (kmeans_fit) stays for callers wanting full-precision "
-    "centroids; sample_diverse gives topic-balanced subsets.",
+    "oracle. One aggregate shuffle per iteration; driver traffic "
+    "k*dim numbers, never rows. sample_diverse caps every cluster of "
+    "the same assignment for topic-balanced subsets.",
 )
 def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_extensions_spark.operators.clustering import (

@@ -630,7 +630,7 @@ def q_cond_null_battery2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_stream_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events fixture as a stream-readable parquet dir
     (cached per (session, sf_dir))."""
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     cache = getattr(spark, "_sx_stream_cache", None)
     if cache is None:
@@ -638,7 +638,7 @@ def _events_stream_path(spark: SparkSession, sf_dir: str) -> str:
         spark._sx_stream_cache = cache
     if sf_dir not in cache:
         ev = _t(spark, sf_dir, "events")["events"]
-        path = tempfile.mkdtemp(prefix="events_stream_q_")
+        path = scratch_dir("events_stream_q_")
         ev.write.mode("overwrite").parquet(path)
         cache[sf_dir] = path
     return cache[sf_dir]

@@ -88,7 +88,7 @@ def q_layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source table — the roundtrip must be lossless.",
 )
 def q_arrow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from spark_extensions_spark.sources.arrow_ipc import (
         read_arrow_ipc,
@@ -98,7 +98,7 @@ def q_arrow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")["documents"].select(
         "doc_id", "lang", F.col("n_chars").cast("bigint").alias("n_chars")
     )
-    path = tempfile.mkdtemp(prefix="arrow_rt_q_")
+    path = scratch_dir("arrow_rt_q_")
     write_arrow_ipc(docs.repartition(4), path)
     return read_arrow_ipc(spark, path)
 
@@ -640,7 +640,7 @@ def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interchange format. Oracle is the source table (lossless).",
 )
 def q_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from spark_extensions_spark.sources.webdataset import (
         read_webdataset,
@@ -650,7 +650,7 @@ def q_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")["documents"].select(
         F.col("doc_id").cast("string").alias("k"), "text", "lang"
     )
-    path = tempfile.mkdtemp(prefix="wds_q_")
+    path = scratch_dir("wds_q_")
     write_webdataset(docs.repartition(4), path, "k", "text", ["lang"])
     return read_webdataset(spark, path)
 

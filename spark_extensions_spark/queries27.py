@@ -435,7 +435,7 @@ def q_sample_weighted_aexpj(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_xml_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from pyspark.sql import functions as F
 
@@ -444,7 +444,7 @@ def q_xml_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") <= 500)
         .select("c_custkey", "c_name", "c_acctbal")
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="xml_rt_q_"), "data")
+    path = os.path.join(scratch_dir("xml_rt_q_"), "data")
     c.write.format("xml").option("rowTag", "customer").save(path)
     back = spark.read.format("xml").option("rowTag", "customer").load(path)
     return back.select(
@@ -842,7 +842,7 @@ def _ann_ivf_persisted_oracle() -> str:
     "the results are identical by construction).",
 )
 def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from pyspark.sql import functions as F
 
@@ -857,7 +857,7 @@ def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_df, cents, _ = ivf_index_table(emb, "vec_id", "embedding", n_lists=16)
     name = "ivf_index_q"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    base = tempfile.mkdtemp(prefix="ivfidx_q_")
+    base = scratch_dir("ivfidx_q_")
     write_table(
         idx_df,
         f"{base}/{name}",
@@ -1907,7 +1907,7 @@ def q_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unpartitioned source.",
 )
 def q_io_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from pyspark.sql import functions as F
 
@@ -1917,7 +1917,7 @@ def q_io_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark._sx_part_cache = cache
     if sf_dir not in cache:
         ev = _t(spark, sf_dir, "events")["events"]
-        path = tempfile.mkdtemp(prefix="events_part_q_")
+        path = scratch_dir("events_part_q_")
         ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
         cache[sf_dir] = path
     part = spark.read.parquet(cache[sf_dir])
@@ -1950,7 +1950,7 @@ def q_io_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bucketed-join test). Oracle joins the unbucketed source.",
 )
 def q_io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from pyspark.sql import functions as F
 
@@ -1962,7 +1962,7 @@ def q_io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark._sx_bucket_cache = cache
     if sf_dir not in cache:
         t = _t(spark, sf_dir, "orders", "customer")
-        base = tempfile.mkdtemp(prefix="bucketed_q_")
+        base = scratch_dir("bucketed_q_")
         # cluster by the bucket key at bucket count before the write:
         # all 8 buckets still get exactly one file each, but they
         # write in parallel instead of through the single task the

@@ -23,12 +23,12 @@ same shape as the real Kafka source.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_extensions_spark.queries import _register, _t
+from spark_extensions_spark.session import scratch_dir
 
 
 def _docs_topic(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
@@ -50,7 +50,7 @@ def _docs_topic(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
         cache = {}
         spark._sx_kafka_topics = cache
     if sf_dir not in cache:
-        root = tempfile.mkdtemp(prefix="filekafka_q_")
+        root = scratch_dir("filekafka_q_")
         client = InMemorySchemaRegistry()
         docs = _t(spark, sf_dir, "documents")["documents"]
         payload = docs.select(
@@ -160,7 +160,7 @@ def q_kafka_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_filekafka(spark)
     events = _t(spark, sf_dir, "events")["events"]
-    root = tempfile.mkdtemp(prefix="filekafka_sink_q_")
+    root = scratch_dir("filekafka_sink_q_")
     (
         events.select(
             F.col("user_id").cast("string").cast("binary").alias("key"),
@@ -234,7 +234,7 @@ def q_kafka_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_filekafka(spark)
     events = _t(spark, sf_dir, "events")["events"]
-    root = tempfile.mkdtemp(prefix="filekafka_compact_q_")
+    root = scratch_dir("filekafka_compact_q_")
     msgs = events.select(
         F.col("user_id").cast("string").cast("binary").alias("key"),
         F.concat(

@@ -31,13 +31,12 @@ yet exercise:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_extensions_spark.queries import _register, _t
-from spark_extensions_spark.session import expansion_width
+from spark_extensions_spark.session import expansion_width, scratch_dir
 
 # gap seconds per event type — values chosen to make gap choice matter
 _GAP_CASE_SQL = (
@@ -228,7 +227,7 @@ def q_udtf_partitioned_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_io_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")["events"]
-    out = tempfile.mkdtemp(prefix="prov_q_")
+    out = scratch_dir("prov_q_")
     (
         e.repartition(1, "event_type")
         .write.mode("overwrite")
@@ -336,9 +335,9 @@ def q_kafka_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_filekafka(spark)
     e = _t(spark, sf_dir, "events")["events"]
-    root = tempfile.mkdtemp(prefix="filekafka_cdc_q_")
-    state_dir = tempfile.mkdtemp(prefix="cdc_state_q_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_q_")
+    root = scratch_dir("filekafka_cdc_q_")
+    state_dir = scratch_dir("cdc_state_q_")
+    ckpt = scratch_dir("cdc_ckpt_q_")
 
     def cdc_messages(df):
         return df.select(
@@ -462,7 +461,7 @@ def q_backfill_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")["events"].withColumn(
         "d", F.to_date("ts").cast("string")
     )
-    sink = tempfile.mkdtemp(prefix="backfill_q_")
+    sink = scratch_dir("backfill_q_")
     # initial load: dates strictly before the cutoff, clustered by the
     # partition column so each date gets ~one file instead of one per
     # task (tasks x dates files + commits otherwise — guide §6)
@@ -540,7 +539,7 @@ def _dpp_fact_dir(spark: SparkSession, sf_dir: str) -> str:
         spark._sx_dpp_fact = cache
     if sf_dir not in cache:
         e = _t(spark, sf_dir, "events")["events"]
-        out = tempfile.mkdtemp(prefix="dpp_fact_q_")
+        out = scratch_dir("dpp_fact_q_")
         (
             e.select(
                 "event_id",

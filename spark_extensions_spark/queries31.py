@@ -235,13 +235,13 @@ def q_string_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SQL.",
 )
 def q_kafka_log_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from spark_extensions_spark.sources import filekafka as fk
 
     fk.register_filekafka(spark)
     e = _t(spark, sf_dir, "events")["events"]
-    root = tempfile.mkdtemp(prefix="filekafka_maint_q_")
+    root = scratch_dir("filekafka_maint_q_")
 
     def gen(lo, hi):
         return e.filter(

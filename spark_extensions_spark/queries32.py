@@ -23,12 +23,12 @@ built-in handling of both:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_extensions_spark.queries import _register, _t
+from spark_extensions_spark.session import scratch_dir
 
 
 @_register(
@@ -52,7 +52,7 @@ from spark_extensions_spark.queries import _register, _t
 )
 def q_io_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")["events"]
-    out = tempfile.mkdtemp(prefix="corrupt_q_")
+    out = scratch_dir("corrupt_q_")
     # serialize each event as one JSON line; TRUNCATE every 7th line
     # mid-record (deterministic by event_id) so it cannot parse
     lines = e.select(
@@ -116,7 +116,7 @@ def q_io_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_io_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")["events"]
-    out = tempfile.mkdtemp(prefix="merge_q_")
+    out = scratch_dir("merge_q_")
     e.filter(F.col("event_id") < 5000).select("event_id", "event_type").write.mode(
         "append"
     ).parquet(out)
@@ -168,7 +168,7 @@ def q_cdc_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _t(spark, sf_dir, "events")["events"]
-    state = tempfile.mkdtemp(prefix="cdc_tt_q_")
+    state = scratch_dir("cdc_tt_q_")
 
     def changes(cond):
         return e.filter(cond).select(

@@ -7,13 +7,12 @@ end). Same determinism rules as the queries.py docstring.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_extensions_spark.queries import _register, _t
 from spark_extensions_spark.queries25 import _LPA_EDGES_SQL
+from spark_extensions_spark.session import scratch_dir
 
 
 # =====================================================================
@@ -178,9 +177,9 @@ def _streaming_outer_join_result(
     )
 
     ev = _t(spark, sf_dir, "events")["events"]
-    base_dir = tempfile.mkdtemp(prefix="souter_src_")
-    out_dir = tempfile.mkdtemp(prefix="souter_out_")
-    ckpt = tempfile.mkdtemp(prefix="souter_ck_")
+    base_dir = scratch_dir("souter_src_")
+    out_dir = scratch_dir("souter_out_")
+    ckpt = scratch_dir("souter_ck_")
     cols = ["user_id", "event_id", "ts"]
     # ONE scan+write staging both sources (partitionBy splits the
     # click/purchase dirs; the partition column isn't stored in the

@@ -8,8 +8,6 @@ end). Same determinism rules as the queries.py docstring.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,6 +17,7 @@ from spark_extensions_spark.operators.sampling import (
 )
 from spark_extensions_spark.queries import _register, _t
 from spark_extensions_spark.queries25 import _LPA_EDGES_SQL
+from spark_extensions_spark.session import scratch_dir
 
 
 # =====================================================================
@@ -39,9 +38,11 @@ _BFS_SEEDS_SQL = (
     "graph (operators/graph.py:bfs_layers): 3 synchronous frontier "
     "expansions from a deterministic seed set — the reachability/"
     "radius primitive behind influence propagation and contamination "
-    "spread analyses. Per round one edge join + one min-aggregate "
-    "(O(m) shuffle), lineage checkpointed; unrolled-CTE oracle, fully "
-    "hash-checked.",
+    "spread analyses. Round r joins the frontier (dist = r) onto the "
+    "persisted dst-partitioned symmetric edge list and min-aggregates "
+    "without an exchange; the one (node, dist) table is the lazily "
+    "checkpointed round state, and no round probes for an empty "
+    "frontier. Unrolled-CTE oracle, fully hash-checked.",
 )
 def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_extensions_spark.operators.graph import (
@@ -165,7 +166,7 @@ def q_cdc_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _t(spark, sf_dir, "events")["events"]
-    state = tempfile.mkdtemp(prefix="cdc_cf_q_")
+    state = scratch_dir("cdc_cf_q_")
 
     def changes(cond):
         return e.filter(cond).select(

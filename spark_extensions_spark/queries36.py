@@ -192,7 +192,7 @@ def q_stat_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch SQL twin — exact integers only.",
 )
 def q_streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from spark_extensions_spark.queries2 import _events_stream_path
     from spark_extensions_spark.streaming import (
@@ -201,7 +201,7 @@ def q_streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    ckpt = tempfile.mkdtemp(prefix="state_inspect_ck_")
+    ckpt = scratch_dir("state_inspect_ck_")
     stream = read_stream_parquet(spark, _events_stream_path(spark, sf_dir))
     agg = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -226,7 +226,7 @@ def q_streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _wet_dir(spark: SparkSession, sf_dir: str) -> str:
     """documents rendered as WET conversion records (cached per
     (session, sf_dir))."""
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from spark_extensions_spark.sources.warc import write_wet
 
@@ -244,7 +244,7 @@ def _wet_dir(spark: SparkSession, sf_dir: str) -> str:
         # ~1 GB segments — splitting here mirrors that layout and is a
         # no-op on already-split inputs.
         docs = ensure_parallelism(_t(spark, sf_dir, "documents")["documents"])
-        path = tempfile.mkdtemp(prefix="wet_q_")
+        path = scratch_dir("wet_q_")
         write_wet(
             docs.select(
                 F.concat(

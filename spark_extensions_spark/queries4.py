@@ -27,7 +27,10 @@ from spark_extensions_spark.queries import (
     dsum_duck,
 )
 from spark_extensions_spark.operators.dedup import ngram_jaccard_pairs
-from spark_extensions_spark.operators.graph import neardup_clusters
+from spark_extensions_spark.operators.graph import (
+    cc_oracle_sql,
+    neardup_clusters,
+)
 from spark_extensions_spark.operators.sampling import (
     hash_bucket,
     hash_bucket_duck,
@@ -356,23 +359,18 @@ def q_streaming_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# exact transitive closure of the n-gram-Jaccard pair set, shared by
+# both connected-components registrations
+_CLUSTERS_ORACLE = (
+    "SELECT node AS doc_id, component AS cluster_id FROM ("
+    + cc_oracle_sql(f"SELECT id_a AS src, id_b AS dst FROM ({_jaccard_oracle()})")
+    + ")"
+)
+
+
 @_register(
     "dedup_clusters",
-    f"""
-    WITH RECURSIVE pairs AS ({_jaccard_oracle()}),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b, id_a FROM pairs
-    ),
-    reach(a, b) AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    )
-    SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-    FROM reach GROUP BY a
-    """,
+    _CLUSTERS_ORACLE,
     doc="Near-dup pairs resolved to duplicate groups: iterative "
     "hash-min connected components (operators/graph.py) over the "
     "n-gram-Jaccard pair set, checked against DuckDB's exact "
@@ -386,21 +384,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "dedup_clusters_star",
-    f"""
-    WITH RECURSIVE pairs AS ({_jaccard_oracle()}),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b, id_a FROM pairs
-    ),
-    reach(a, b) AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    )
-    SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-    FROM reach GROUP BY a
-    """,
+    _CLUSTERS_ORACLE,
     doc="Same duplicate-group resolution as dedup_clusters but via "
     "alternating large-star/small-star (Kiveris et al. SoCC'14, "
     "operators/graph.py:connected_components_star): O(log^2 n) rounds "

@@ -135,23 +135,18 @@ _ORC_JSONL_SCRATCH: list = []
 
 
 def _orc_jsonl_scratch_dir() -> str:
-    """A FRESH subdirectory per invocation under one per-process root
-    that is removed at interpreter exit. The root bounds disk usage to
-    the process lifetime (the ADVICE leak was dirs surviving the
-    process); the fresh subdir means a second invocation never
-    overwrites files a previously returned — still lazy — DataFrame's
-    file index points at (mode=overwrite on a shared dir would delete
-    them and FileNotFound the earlier plan)."""
+    """A FRESH subdirectory per invocation under one scratch dir, which
+    is removed at interpreter exit (session.scratch_dir). The fresh
+    subdir means a second invocation never overwrites files a
+    previously returned — still lazy — DataFrame's file index points at
+    (mode=overwrite on a shared dir would delete them and FileNotFound
+    the earlier plan)."""
     import os
 
     if not _ORC_JSONL_SCRATCH:
-        import atexit
-        import shutil
-        import tempfile
+        from spark_extensions_spark.session import scratch_dir
 
-        root = tempfile.mkdtemp(prefix="orc_jsonl_rt_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _ORC_JSONL_SCRATCH.extend([root, 0])
+        _ORC_JSONL_SCRATCH.extend([scratch_dir("orc_jsonl_rt_"), 0])
     _ORC_JSONL_SCRATCH[1] += 1
     d = os.path.join(
         _ORC_JSONL_SCRATCH[0], f"inv{_ORC_JSONL_SCRATCH[1]}"

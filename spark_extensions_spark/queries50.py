@@ -18,12 +18,11 @@ end). Same determinism rules as the queries.py docstring.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_extensions_spark.queries import _register, _t
+from spark_extensions_spark.session import scratch_dir
 
 # ------------------------------------------------------------------
 # pipeline_streaming_curation
@@ -124,10 +123,10 @@ def q_pipeline_streaming_curation(
 
     register_filekafka(spark)
     ev = _t(spark, sf_dir, "events")["events"]
-    root = tempfile.mkdtemp(prefix="filekafka_cur_")
-    state_dir = tempfile.mkdtemp(prefix="cur_state_")
-    seen_dir = tempfile.mkdtemp(prefix="cur_seen_") + "/keys"
-    ckpt = tempfile.mkdtemp(prefix="cur_ckpt_")
+    root = scratch_dir("filekafka_cur_")
+    state_dir = scratch_dir("cur_state_")
+    seen_dir = scratch_dir("cur_seen_") + "/keys"
+    ckpt = scratch_dir("cur_ckpt_")
 
     def messages(df: DataFrame) -> DataFrame:
         return df.select(

@@ -1339,7 +1339,7 @@ def _ann_ivf_store_oracle() -> str:
     "list_id-partitioned immutable segments — no corpus Exchange.",
 )
 def q_ann_ivf_store_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from spark_extensions_spark.session import scratch_dir
 
     from spark_extensions_spark.operators import ann_store as st
     from spark_extensions_spark.operators.similarity import (
@@ -1348,7 +1348,7 @@ def q_ann_ivf_store_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")["embeddings"]
     queries = emb.filter(F.col("vec_id") < 10)
-    d = tempfile.mkdtemp(prefix="annstore_q_")
+    d = scratch_dir("annstore_q_")
     st.publish_base(emb, d, "vec_id", "embedding", n_lists=16)
     idx = st.read_index(spark, d).select(
         F.col("id").alias("vec_id"),

@@ -25,7 +25,10 @@ deployment while staying correct on ``local[N]`` test runs:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -51,6 +54,29 @@ _DEFAULT_CONF: dict[str, str] = {
 
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SCRATCH: dict[int, str] = {}  # pid -> this process's scratch root
+
+
+def _remove_scratch(pid: int, root: str) -> None:
+    # a forked child inherits the hook; only the creating process cleans
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _scratch_root() -> str:
+    pid = os.getpid()
+    if pid not in _SCRATCH:
+        _SCRATCH[pid] = tempfile.mkdtemp(prefix="spark_graft_")
+        atexit.register(_remove_scratch, pid, _SCRATCH[pid])
+    return _SCRATCH[pid]
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for the package's scratch output (query staging
+    tables, stream sources, default streaming checkpoints), made under a
+    per-process root in the system temp dir that an ``atexit`` hook
+    removes when the interpreter exits."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def get_spark(
@@ -145,13 +171,12 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     """
     if getattr(spark, "_sx_pyfiles_added", False):
         return
-    import tempfile
     import zipfile
 
     root = _PACKAGE_ROOT
     pkg_dir = os.path.join(root, "spark_extensions_spark")
     zpath = os.path.join(
-        tempfile.gettempdir(), f"spark_extensions_spark_pkg_{os.getpid()}.zip"
+        _scratch_root(), f"spark_extensions_spark_pkg_{os.getpid()}.zip"
     )
     with zipfile.ZipFile(zpath, "w") as z:
         for dirpath, _, files in os.walk(pkg_dir):

@@ -17,12 +17,13 @@ Scale notes baked into the API:
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from spark_extensions_spark.session import scratch_dir
 
 
 def read_stream_parquet(
@@ -163,7 +164,7 @@ def run_available_now(
     """
     spark = result.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = checkpoint_dir or scratch_dir("ckpt_")
     prev = None
     prev_provider = None
     _prov_key = "spark.sql.streaming.stateStore.providerClass"
@@ -209,7 +210,7 @@ def run_foreach_batch(
     failed batches with the same batch_id — make ``batch_fn`` idempotent
     per (checkpoint, batch_id) for exactly-once sinks.
     """
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_fb_")
+    ckpt = checkpoint_dir or scratch_dir("ckpt_fb_")
     q = (
         result.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", ckpt)

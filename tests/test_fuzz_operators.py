@@ -74,15 +74,15 @@ def test_fuzz_generation_is_seed_pinned():
 
 
 @pytest.mark.slow
-def test_operator_fuzz_1320_cases_no_divergence(spark):
+def test_operator_fuzz_1410_cases_no_divergence(spark):
     n_pass, failures = run_fuzz(spark, n_per_op=30, seed="opfuzz-r8")
     msg = "\n".join(f"{o}#{i}: {p}" for o, i, p in failures[:8])
     assert not failures, f"{len(failures)} divergences:\n{msg}"
-    assert n_pass == 1320
+    assert n_pass == 1410
 
 
 def test_operator_fuzz_smoke(spark):
-    """Fast default-profile twin of the 1320-case gate: the first two
+    """Fast default-profile twin of the 1410-case gate: the first two
     seed-pinned cases of EVERY operator (same generator, same oracle
     comparison) — catches harness rot and gross divergences in
     seconds; the full sweep runs under ``-m slow``."""

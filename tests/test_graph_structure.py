@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from spark_extensions_spark.operators.graph import (
     canonical_edges,
     degree_distribution,
@@ -163,3 +165,27 @@ def test_bfs_layers_multi_source_min(spark):
         for r in bfs_layers(_edges(spark, pairs), seeds, rounds=3).collect()
     }
     assert out == {1: 0, 2: 1, 3: 2, 4: 1, 5: 0}
+
+
+def test_cc_round_caps_pin_the_non_convergence_boundary(spark):
+    """The fixpoint loop's round accounting: hash-min on a 12-node path
+    finishes at max_iter=11 (10 moving rounds + the no-change round)
+    and raises at 10; large-star/small-star on the 400-edge chain
+    finishes at 10 and raises at 9."""
+    from spark_extensions_spark.operators.graph import (
+        connected_components,
+        connected_components_star,
+    )
+
+    for fn, n_edges, cap in (
+        (connected_components, 11, 11),
+        (connected_components_star, 400, 10),
+    ):
+        df = spark.createDataFrame(
+            [(i, i + 1) for i in range(n_edges)], "s long, d long"
+        )
+        rows = fn(df, "s", "d", max_iter=cap).collect()
+        assert {r.component for r in rows} == {0}
+        assert len(rows) == n_edges + 1
+        with pytest.raises(RuntimeError, match="did not converge"):
+            fn(df, "s", "d", max_iter=cap - 1).collect()

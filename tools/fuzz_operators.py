@@ -15,7 +15,7 @@ columns, and the order-insensitive value hash.
 Reproduce one case standalone:
 ``python tools/fuzz_operators.py [sf_ignored] --op wilcoxon --case 7``
 
-Forty-four operators x 30 pinned cases = 1320 (the pytest gate).
+Forty-seven operators x 30 pinned cases = 1410 (the pytest gate).
 """
 
 from __future__ import annotations
@@ -1095,6 +1095,9 @@ def _seventh_wave_ops() -> list[OpCase]:
     from spark_extensions_spark.operators.graph import (
         bfs_layers,
         bfs_oracle_sql,
+        cc_oracle_sql,
+        connected_components,
+        connected_components_star,
         k_core,
         kcore_oracle_sql,
         label_propagation,
@@ -1154,6 +1157,31 @@ def _seventh_wave_ops() -> list[OpCase]:
             lambda src, rows: bfs_oracle_sql(
                 _edges_sql(src), seeds_sql.format(src=src), rounds=2
             ),
+        ),
+        # more rounds than any generated graph's diameter (<= 9): the
+        # trailing rounds expand an empty frontier
+        OpCase(
+            "bfs_deep",
+            "src bigint, dst bigint",
+            gen_edges,
+            lambda df: bfs_layers(df, seeds(df), rounds=12),
+            lambda src, rows: bfs_oracle_sql(
+                _edges_sql(src), seeds_sql.format(src=src), rounds=12
+            ),
+        ),
+        OpCase(
+            "cc",
+            "src bigint, dst bigint",
+            gen_edges,
+            lambda df: connected_components(df, "src", "dst"),
+            lambda src, rows: cc_oracle_sql(_edges_sql(src)),
+        ),
+        OpCase(
+            "cc_star",
+            "src bigint, dst bigint",
+            gen_edges,
+            lambda df: connected_components_star(df, "src", "dst"),
+            lambda src, rows: cc_oracle_sql(_edges_sql(src)),
         ),
     ]
 

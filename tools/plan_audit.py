@@ -162,6 +162,11 @@ def main() -> int:
         "assigned at runtime (pre-execution AQE plan) — not a missing",
         "codegen path.",
         "",
+        "Full unrolled plans of the iterative queries come from",
+        "`python tools/plan_unrolled.py <query>... [--out DIR]`; the",
+        "round-10/11 dumps (`plans/r10`, `plans/r11`) were last committed",
+        "in bd659d5.",
+        "",
         "| query | plan summary |",
         "|---|---|",
     ]

@@ -14,9 +14,9 @@ executed plan (the real run cuts at each checkpoint) but exactly the
 per-round operator shape optimization claims are about.
 
 Usage: python tools/plan_unrolled.py <query> [<query> ...]
-       [--sf-dir /root/testdata/sf0.001] [--out plans/r11]
-Writes <out>/<query>_unrolled.txt (plus an Exchange-count summary line
-to stdout).
+       [--sf-dir SF_DIR] [--out DIR]
+Prints an Exchange/BroadcastHashJoin/SortMergeJoin summary line per
+query; with --out also writes <DIR>/<query>_unrolled.txt.
 """
 
 from __future__ import annotations

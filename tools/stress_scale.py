@@ -237,12 +237,12 @@ def main() -> int:
     )
 
     from spark_extensions_spark.operators.clustering import (
-        kmeans_assignments,
+        kmeans_assignments_det,
     )
 
     run(
         "embedding_kmeans",
-        lambda: kmeans_assignments(
+        lambda: kmeans_assignments_det(
             emb, "vec_id", "embedding", k=8, iters=2
         ).count(),
     )

@@ -8,7 +8,8 @@ truncates long lines, which nulled round 1's parsed bench).
 Session, warm-up and noop-sink timing come from tools/measure.py, shared
 with the profiling tools. Session build and warm-up time are excluded.
 ``env`` records what the timings ran on (see :func:`environment`), so a
-run is read against its own master, width, cores and versions.
+run is read against its own master, width, cores, versions and the
+place its Python workers import pyspark from.
 """
 
 from __future__ import annotations
@@ -20,7 +21,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_extensions_spark.queries import registry  # noqa: E402
-from tools.measure import session, time_noop, warm_up  # noqa: E402
+from tools.measure import (  # noqa: E402
+    session,
+    time_noop,
+    warm_up,
+    worker_pyspark,
+)
 
 # Re-measure thresholds shared with tools/bench_diff.py's gate so the
 # rows the differ would flag are exactly the rows that get a second,
@@ -82,6 +88,7 @@ def environment(spark) -> dict:
         "duckdb": duckdb.__version__,
         "python": sys.version.split()[0],
         "git_sha": sha,
+        "worker_pyspark": worker_pyspark(spark),
     }
 
 

@@ -853,16 +853,18 @@ def kcore_oracle_sql(
     (same contract as :func:`lpa_oracle_sql`).
     """
     parts = [f"WITH e0 AS ({edges_sql})"]
+    # each round reads the previous one three times: MATERIALIZED keeps
+    # the plan linear in rounds (inlined, it grows 3^rounds)
     for i in range(1, rounds + 1):
         prev = f"e{i-1}"
         parts.append(
-            f"k{i} AS (SELECT node FROM ("
+            f"k{i} AS MATERIALIZED (SELECT node FROM ("
             f"SELECT src AS node FROM {prev} "
             f"UNION ALL SELECT dst FROM {prev}) "
             f"GROUP BY node HAVING COUNT(*) >= {k})"
         )
         parts.append(
-            f"e{i} AS (SELECT src, dst FROM {prev} "
+            f"e{i} AS MATERIALIZED (SELECT src, dst FROM {prev} "
             f"WHERE src IN (SELECT node FROM k{i}) "
             f"AND dst IN (SELECT node FROM k{i}))"
         )

@@ -14,13 +14,19 @@ deployment while staying correct on ``local[N]`` test runs:
   bench and profiling tools set ``$SPARK_GRAFT_CPUS`` instead, and a
   real cluster deployment overrides via ``extra_conf`` (AQE coalescing
   makes over-provisioning cheap).
-- On a local master, Python workers fork from the ``_pydaemon`` module
-  (``spark.python.daemon.module``). Up to Python 3.11, each task's
-  ``importlib.invalidate_caches()`` eagerly re-reads the central
-  directory of every zip on the worker's path (``pyspark.zip``, the
-  Spark jars): about 0.3 s a task. The daemon's zip importers re-read an
-  archive only when it changed. Local masters only: executors elsewhere
-  may not have this package, so other masters keep Spark's daemon.
+- On a local master, every Python process Spark starts (the worker
+  daemon, the Python DataSource planners, the streaming source runner)
+  runs ``_boot/sitecustomize.py`` at interpreter start, through
+  ``spark.executorEnv.PYTHONPATH``. Spark puts ``pyspark.zip`` first on
+  a worker's path, and the zip holds no bytecode, so each fresh
+  interpreter compiled pyspark: about 1 s for every streaming query's
+  source runner. The hook drops Spark's archives when the installed
+  pyspark is the same version, so imports load its compiled copy, and
+  makes zip importers re-read an archive on each task's
+  ``importlib.invalidate_caches()`` only when it changed (up to Python
+  3.11 each call re-read every zip on the path, about 0.3 s a task).
+  Local masters only: executors elsewhere may not have this package, so
+  other masters keep Spark's stock workers.
 """
 
 from __future__ import annotations
@@ -54,6 +60,7 @@ _DEFAULT_CONF: dict[str, str] = {
 
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_BOOT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_boot")
 _SCRATCH: dict[int, str] = {}  # pid -> this process's scratch root
 
 
@@ -104,13 +111,12 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
-        # Python workers fork from a daemon whose zip importers skip
-        # unchanged archives (_pydaemon.py); the PYTHONPATH lets it
-        # import this package whatever the driver's cwd
+        # every Python process Spark starts can import this package
+        # whatever the driver's cwd, and runs _boot/sitecustomize.py
         conf.setdefault(
-            "spark.python.daemon.module", "spark_extensions_spark._pydaemon"
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join([_PACKAGE_ROOT, _BOOT_DIR]),
         )
-        conf.setdefault("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

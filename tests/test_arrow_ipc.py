@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import glob
-import tempfile
+import os
 
 import pyarrow.ipc as pa_ipc
 import pytest
@@ -16,13 +16,13 @@ from spark_extensions_spark.sources.arrow_ipc import (
 )
 
 
-def test_roundtrip_multi_partition(spark):
+def test_roundtrip_multi_partition(spark, tmp_path):
     df = spark.range(1000).select(
         F.col("id"),
         (F.col("id") % 7).cast("double").alias("v"),
         F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
     ).repartition(4)
-    path = tempfile.mkdtemp(prefix="arrow_ipc_")
+    path = str(tmp_path)
     write_arrow_ipc(df, path)
     files = glob.glob(path + "/*.arrow")
     assert len(files) == 4
@@ -33,9 +33,9 @@ def test_roundtrip_multi_partition(spark):
     assert got[13] == (13 % 7 * 1.0, "s13")
 
 
-def test_files_are_readable_by_plain_pyarrow(spark):
+def test_files_are_readable_by_plain_pyarrow(spark, tmp_path):
     df = spark.range(10).select(F.col("id"), F.lit("x").alias("tag"))
-    path = tempfile.mkdtemp(prefix="arrow_ipc_")
+    path = str(tmp_path)
     write_arrow_ipc(df.coalesce(1), path)
     [f] = glob.glob(path + "/*.arrow")
     table = pa_ipc.open_file(f).read_all()
@@ -43,28 +43,27 @@ def test_files_are_readable_by_plain_pyarrow(spark):
     assert table.column_names == ["id", "tag"]
 
 
-def test_read_empty_dir_raises(spark):
-    path = tempfile.mkdtemp(prefix="arrow_ipc_")
+def test_read_empty_dir_raises(spark, tmp_path):
+    path = str(tmp_path)
     with pytest.raises(ValueError):
         read_arrow_ipc(spark, path)
 
 
-def test_nulls_roundtrip(spark):
+def test_nulls_roundtrip(spark, tmp_path):
     df = spark.range(6).select(
         F.col("id"),
         F.when(F.col("id") % 2 == 0, F.col("id").cast("double")).alias("v"),
     )
-    path = tempfile.mkdtemp(prefix="arrow_ipc_")
+    path = str(tmp_path)
     write_arrow_ipc(df, path)
     back = read_arrow_ipc(spark, path)
     vals = {r.id: r.v for r in back.collect()}
     assert vals[1] is None and vals[2] == 2.0
 
 
-def test_webdataset_roundtrip_and_determinism(spark):
+def test_webdataset_roundtrip_and_determinism(spark, tmp_path):
     import glob
     import hashlib
-    import tempfile
 
     from spark_extensions_spark.sources.webdataset import (
         read_webdataset,
@@ -76,7 +75,9 @@ def test_webdataset_roundtrip_and_determinism(spark):
         F.concat(F.lit("text-"), F.col("id").cast("string")).alias("t"),
         (F.col("id") % 3).alias("grp"),
     ).repartition(3)
-    p1, p2 = tempfile.mkdtemp(), tempfile.mkdtemp()
+    p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
+    os.mkdir(p1)
+    os.mkdir(p2)
     write_webdataset(df.coalesce(1), p1, "k", "t", ["grp"])
     write_webdataset(df.coalesce(1), p2, "k", "t", ["grp"])
     # reproducible bytes: identical content hash for identical input
@@ -95,9 +96,8 @@ def test_webdataset_roundtrip_and_determinism(spark):
     assert _json.loads(rows["doc7"].meta) == {"grp": 1}
 
 
-def test_webdataset_multi_shard(spark):
+def test_webdataset_multi_shard(spark, tmp_path):
     import glob
-    import tempfile
 
     from spark_extensions_spark.sources.webdataset import (
         read_webdataset,
@@ -108,7 +108,7 @@ def test_webdataset_multi_shard(spark):
         F.col("id").cast("string").alias("k"),
         F.lit("x").alias("t"),
     ).repartition(4)
-    p = tempfile.mkdtemp()
+    p = str(tmp_path)
     write_webdataset(df, p, "k", "t")
     assert len(glob.glob(p + "/*.tar")) == 4
     assert read_webdataset(spark, p).count() == 50

@@ -1,21 +1,26 @@
 """Fixed costs paid on every task or query, removed without changing
-results: the worker daemon's zip importers (``_pydaemon.py``), the
-per-session parquet schema memo of ``load_tables`` and the CDC fold's
-write width (``operators/incremental.py``)."""
+results: the start-up hook of Spark's Python processes
+(``_boot/sitecustomize.py``), the per-session parquet schema memo of
+``load_tables`` and the CDC fold's write width
+(``operators/incremental.py``)."""
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import shutil
+import subprocess
+import sys
 import uuid
 import zipfile
 import zipimport
 
 import duckdb
+import pyspark
 from pyspark.sql import functions as F
 
-from spark_extensions_spark import _pydaemon
+from spark_extensions_spark._boot import sitecustomize as boot
 from spark_extensions_spark.operators.incremental import (
     apply_cdc_batch,
     read_cdc_state,
@@ -36,17 +41,139 @@ def _jobs_started(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# --- worker daemon ---------------------------------------------------
+# --- start-up hook of Spark's Python processes ------------------------
 
-def test_python_workers_run_the_daemon_replacement(spark):
+BOOT_DIR = os.path.dirname(boot.__file__)
+SPARK_ARCHIVES = ("pyspark.zip", "py4j-*-src.zip", "spark-core_*.jar")
+
+
+def _assert_installed_pyspark(pyspark_file: str, path: list) -> None:
+    # a module loaded from an archive has a __file__ inside it, which is
+    # no file of its own
+    assert os.path.isfile(pyspark_file), pyspark_file
+    on_path = [
+        p for p in path
+        if any(fnmatch.fnmatch(os.path.basename(p), a) for a in SPARK_ARCHIVES)
+    ]
+    assert on_path == [], on_path
+
+
+def test_udf_workers_import_the_installed_pyspark(spark):
     @F.udf("string")
-    def importer_fn_module(_):
+    def where(_):
+        import json
+        import sys
         import zipimport
 
-        return zipimport.zipimporter.invalidate_caches.__module__
+        import pyspark
 
-    got = spark.range(1).select(importer_fn_module("id")).first()[0]
-    assert got == "spark_extensions_spark._pydaemon"
+        importer = zipimport.zipimporter.invalidate_caches.__module__
+        return json.dumps([pyspark.__file__, sys.path, importer])
+
+    pyspark_file, path, importer = json.loads(
+        spark.range(1).select(where("id")).first()[0]
+    )
+    _assert_installed_pyspark(pyspark_file, path)
+    assert importer == "sitecustomize"
+
+
+def test_streaming_source_runner_imports_the_installed_pyspark(spark, tmp_path):
+    from pyspark.sql.datasource import DataSource, DataSourceStreamReader
+
+    out = str(tmp_path / "runner.json")
+
+    class Reader(DataSourceStreamReader):
+        def initialOffset(self):
+            # runs in the streaming source runner, not a task worker
+            import json
+            import sys
+
+            import pyspark
+
+            with open(out, "w") as f:
+                json.dump([pyspark.__file__, sys.path], f)
+            return {"pos": 0}
+
+        def latestOffset(self):
+            return {"pos": 0}
+
+        def partitions(self, start, end):
+            return []
+
+        def read(self, partition):
+            return iter(())
+
+    class RunnerProbe(DataSource):
+        @classmethod
+        def name(cls):
+            return "boot_runner_probe"
+
+        def schema(self):
+            return "x int"
+
+        def streamReader(self, schema):
+            return Reader()
+
+    spark.dataSource.register(RunnerProbe)
+    query = (
+        spark.readStream.format("boot_runner_probe").load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    with open(out) as f:
+        pyspark_file, path = json.load(f)
+    _assert_installed_pyspark(pyspark_file, path)
+
+
+def _spark_path(root, version_py: bytes) -> list:
+    """A worker-like path: Spark's three archives, a zip of other code,
+    and the directory that holds the installed pyspark and py4j."""
+    os.makedirs(root)
+    archives = [
+        os.path.join(root, n)
+        for n in ("pyspark.zip", "py4j-0.10.9.9-src.zip", "spark-core_2.13.jar")
+    ]
+    with zipfile.ZipFile(archives[0], "w") as z:
+        z.writestr("pyspark/version.py", version_py)
+    for a in archives[1:]:
+        _write_zip(a, {"placeholder": ""})
+    other = os.path.join(root, "app.zip")
+    _write_zip(other, {"app": ""})
+    return [*archives, other, os.path.dirname(os.path.dirname(pyspark.__file__))]
+
+
+def test_trim_drops_only_spark_archives_of_the_installed_version(tmp_path):
+    version_py = os.path.join(os.path.dirname(pyspark.__file__), "version.py")
+    with open(version_py, "rb") as f:
+        installed = f.read()
+    path = _spark_path(tmp_path / "same", installed)
+    assert boot.trim(path) == path[3:]
+
+    path = _spark_path(tmp_path / "other", b"__version__: str = '0.0.1'\n")
+    assert boot.trim(path) == path
+
+
+def test_a_sitecustomize_the_hook_hides_still_runs(tmp_path):
+    hidden = tmp_path / "hidden"
+    hidden.mkdir()
+    (hidden / "sitecustomize.py").write_text("print('hidden sitecustomize ran')\n")
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([BOOT_DIR, str(hidden)]))
+    got = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import zipimport;"
+            "print(zipimport.zipimporter.invalidate_caches.__module__)",
+        ],
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert got == ["hidden", "sitecustomize", "ran", "sitecustomize"]
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
@@ -69,16 +196,16 @@ def test_zip_directory_is_reread_only_when_the_archive_changed(
         return stock_read(path)
 
     monkeypatch.setattr(zipimport, "_read_directory", counting_read)
-    _pydaemon.invalidate_caches(importer)  # first call stamps the archive
+    boot.invalidate_caches(importer)  # first call stamps the archive
     reads.clear()
-    _pydaemon.invalidate_caches(importer)
-    _pydaemon.invalidate_caches(importer)
+    boot.invalidate_caches(importer)
+    boot.invalidate_caches(importer)
     assert reads == []
 
     _write_zip(archive, {"m1": "X = 1\n", "m2": "Y = 2\n"})
     st = os.stat(archive)
     os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    _pydaemon.invalidate_caches(importer)
+    boot.invalidate_caches(importer)
     assert reads == [archive]
     assert importer.find_spec("m2") is not None
 

@@ -134,6 +134,26 @@ def test_k_core_fixed_rounds_is_partial_peel(spark):
     assert full == {1, 2, 3}
 
 
+def test_k_core_oracle_ten_rounds_on_a_12_node_path(spark):
+    """Path 0-1-...-11 closed into the triangle {9, 10, 11}: the path
+    peels one node a round, so all 10 rounds change the graph. The
+    oracle's per-round CTEs are MATERIALIZED; inlined, DuckDB's plan
+    grows 3^rounds, and 6 rounds on a path already ran for minutes."""
+    import duckdb
+
+    from spark_extensions_spark.operators.graph import k_core, kcore_oracle_sql
+
+    pairs = [(i, i + 1) for i in range(11)] + [(9, 11)]
+    values = ", ".join(f"({a}, {b})" for a, b in pairs)
+    sql = kcore_oracle_sql(
+        f"SELECT * FROM (VALUES {values}) t(src, dst)", k=2, rounds=10
+    )
+    want = sorted(duckdb.sql(sql).fetchall())
+    assert want == [(9, 2), (10, 2), (11, 2)]
+    got = k_core(_edges(spark, pairs), k=2, rounds=10).collect()
+    assert sorted(map(tuple, got)) == want
+
+
 def test_k_core_empty_when_k_exceeds_degrees(spark):
     from spark_extensions_spark.operators.graph import k_core
 

@@ -24,9 +24,12 @@ def test_bench_line_records_its_environment(spark):
     env = environment(spark)
     assert set(env) == {
         "master", "default_parallelism", "shuffle_partitions", "nproc",
-        "pyspark", "duckdb", "python", "git_sha",
+        "pyspark", "duckdb", "python", "git_sha", "worker_pyspark",
     }
     assert env["master"] == spark.sparkContext.master
     assert env["default_parallelism"] == spark.sparkContext.defaultParallelism
     assert env["nproc"] >= 1
+    # a get_spark session on a local master starts its workers on the
+    # installed pyspark
+    assert env["worker_pyspark"] == "installed"
     assert len(json.dumps(env)) < 300  # the bench line stays compact

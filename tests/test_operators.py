@@ -240,16 +240,14 @@ def test_ann_lsh_det_buckets_and_recall(spark):
     assert len(got_det & truth) / len(truth) > 0.3
 
 
-def test_bucketed_join_skips_shuffle(spark):
+def test_bucketed_join_skips_shuffle(spark, tmp_path):
     """Bucketed tables joined on the bucket key: no Exchange on either side."""
-    import tempfile
-
     from spark_extensions_spark.sources import write_table
 
     df = spark.createDataFrame(
         [(i, i % 7, f"v{i}") for i in range(100)], ["id", "k", "v"]
     )
-    base = tempfile.mkdtemp(prefix="bktj_")
+    base = str(tmp_path)
     for name in ("bkt_a_t", "bkt_b_t"):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         write_table(
@@ -1165,12 +1163,10 @@ def test_kmv_set_ops_accuracy(spark):
     assert abs(r2["est_intersect"] - 25.0) < 1e-9
 
 
-def test_ivf_index_persisted_equivalence(spark):
+def test_ivf_index_persisted_equivalence(spark, tmp_path):
     """The persisted-IVF-index query path: same answer as the inline
     det-IVF query, and with the index bucketed on list_id the probe
     join re-shuffles at most the (tiny) query side."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from spark_extensions_spark.operators.similarity import (
@@ -1189,7 +1185,7 @@ def test_ivf_index_persisted_equivalence(spark):
     idx_df, cents, _ = ivf_index_table(emb, "vec_id", "embedding", n_lists=16)
     name = "ivf_index_t_test"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    base = tempfile.mkdtemp(prefix="ivfidx_")
+    base = str(tmp_path)
     write_table(
         idx_df,
         f"{base}/{name}",

@@ -135,12 +135,10 @@ def test_incremental_minhash_matches_full_selfjoin(spark, sf_dir):
     assert inc2 == inc
 
 
-def test_band_index_persisted_bucketed_join(spark, sf_dir):
+def test_band_index_persisted_bucketed_join(spark, sf_dir, tmp_path):
     """The dedup index written bucketed on the band key: the incremental
     join reuses the bucketing — the corpus side scans without an
     Exchange, only the (small) new-batch side shuffles."""
-    import tempfile
-
     from spark_extensions_spark.operators.dedup import (
         minhash_band_table,
         minhash_lsh_candidates_incremental,
@@ -153,7 +151,7 @@ def test_band_index_persisted_bucketed_join(spark, sf_dir):
 
     name = "band_index_t_test"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    base = tempfile.mkdtemp(prefix="bandidx_")
+    base = str(tmp_path)
     write_table(
         minhash_band_table(corpus, "doc_id", "text"),
         f"{base}/{name}",
@@ -180,9 +178,7 @@ def test_band_index_persisted_bucketed_join(spark, sf_dir):
     }
 
 
-def test_write_shards_matches_manifest(spark, sf_dir):
-    import tempfile
-
+def test_write_shards_matches_manifest(spark, sf_dir, tmp_path):
     from spark_extensions_spark.sources.export import (
         shard_manifest,
         write_shards,
@@ -192,7 +188,7 @@ def test_write_shards_matches_manifest(spark, sf_dir):
         "doc_id", "text"
     )
     n_shards = 4
-    path = tempfile.mkdtemp(prefix="shards_") + "/out"
+    path = str(tmp_path / "out")
     write_shards(docs, path, "doc_id", n_shards)
     manifest = {
         r["shard"]: r["n_rows"]

@@ -94,17 +94,15 @@ def test_one_scan_stats_queries(spark):
         }, (name, scans)
 
 
-def test_dynamic_partition_pruning_fires(spark):
+def test_dynamic_partition_pruning_fires(spark, tmp_path):
     """A fact table partitioned on the join key, joined to a selective
     dim, must plan a dynamicpruning subquery on the partition column —
     at 100 TB this skips whole partitions at runtime instead of
     scanning them (AQE's complement for star joins)."""
     import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    base = tempfile.mkdtemp(prefix="dpp_")
+    base = str(tmp_path)
     fact_p = os.path.join(base, "fact")
     spark.range(10000).select(
         F.col("id"), (F.col("id") % 20).alias("pk")

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -27,11 +26,11 @@ from spark_extensions_spark.sources import (
 # ------------------------------------------------------------------- sources
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])
-def test_write_read_roundtrip(spark, fmt):
+def test_write_read_roundtrip(spark, fmt, tmp_path):
     df = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", 2.5), (3, None, None)], ["id", "s", "x"]
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="io_"), fmt)
+    path = str(tmp_path / fmt)
     wopts = {"header": True} if fmt == "csv" else {}
     write_table(df, path, fmt=fmt, mode="overwrite", **wopts)
     opts = {"header": True} if fmt == "csv" else {}
@@ -43,11 +42,11 @@ def test_write_read_roundtrip(spark, fmt):
     assert {r["id"] for r in back.collect()} == {1, 2, 3}
 
 
-def test_write_partitioned(spark):
+def test_write_partitioned(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, "even" if i % 2 == 0 else "odd") for i in range(10)], ["id", "par"]
     )
-    path = tempfile.mkdtemp(prefix="part_") + "/t"
+    path = str(tmp_path / "t")
     write_table(df, path, mode="overwrite", partition_by=["par"])
     assert sorted(
         d for d in os.listdir(path) if d.startswith("par=")
@@ -59,9 +58,9 @@ def test_write_partitioned(spark):
     assert "par=odd" not in plan
 
 
-def test_write_bucketed(spark):
+def test_write_bucketed(spark, tmp_path):
     df = spark.createDataFrame([(i, i % 3) for i in range(30)], ["id", "k"])
-    path = tempfile.mkdtemp(prefix="bkt_") + "/t"
+    path = str(tmp_path / "t")
     name = "bucketed_t_test"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     write_table(
@@ -207,7 +206,7 @@ def test_jdbc_roundtrip_embedded_derby(spark):
     assert "PushedFilters" in plan or "pushedfilters" in plan.lower()
 
 
-def test_avro_container_roundtrip(spark):
+def test_avro_container_roundtrip(spark, tmp_path):
     """Avro OCF write→read roundtrip on the pure-Python codec, null and
     deflate codecs (SURVEY §2.E scans row 'avro')."""
     import datetime
@@ -223,7 +222,7 @@ def test_avro_container_roundtrip(spark):
         "id long, s string, x double, d date, tags array<string>",
     )
     for codec in ("null", "deflate"):
-        path = tempfile.mkdtemp(prefix=f"avro_{codec}_") + "/t"
+        path = str(tmp_path / codec / "t")
         write_avro(df, path, codec=codec)
         back = read_avro(spark, path)
         assert back.schema.fieldNames() == df.schema.fieldNames()
@@ -234,13 +233,13 @@ def test_avro_container_roundtrip(spark):
             assert list(g["tags"] or []) == list(r["tags"] or [])
 
 
-def test_avro_container_schema_resolution(spark):
+def test_avro_container_schema_resolution(spark, tmp_path):
     """Read with an evolved reader schema: added field defaults, removed
     field skipped — classic Avro resolution at the file level."""
     from spark_extensions_spark.sources import read_avro, write_avro
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    path = tempfile.mkdtemp(prefix="avro_evo_") + "/t"
+    path = str(tmp_path / "t")
     write_avro(df, path)
     reader = {
         "type": "record",
@@ -397,14 +396,12 @@ def test_phash_real_codec_gate(spark):
     )
 
 
-def test_jsonl_shard_export_roundtrip(spark, sf_dir):
+def test_jsonl_shard_export_roundtrip(spark, sf_dir, tmp_path):
     """write_shards with fmt='json' emits JSON-Lines shard dirs (the
     standard LLM training interchange): every row survives, shard
     assignment is deterministic, and the files are plain JSONL."""
     import glob
     import json
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from spark_extensions_spark.sources.export import (
@@ -417,7 +414,7 @@ def test_jsonl_shard_export_roundtrip(spark, sf_dir):
         .select("doc_id", "text", "lang")
         .filter(F.col("doc_id") < 100)
     )
-    path = tempfile.mkdtemp(prefix="jsonl_shards_")
+    path = str(tmp_path)
     write_shards(docs, path, "doc_id", n_shards=4, fmt="json")
     back = spark.read.json(f"{path}/shard=*")
     assert back.count() == docs.count()

@@ -22,13 +22,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def events_stream(spark):
+def events_stream(spark, tmp_path_factory):
     # load via load_tables to get ts restored from TIMESTAMP(NANOS);
     # materialize to a temp parquet dir the file source can re-read
-    import tempfile
-
     ev = load_tables(spark, SF_DIR, "events")["events"]
-    path = tempfile.mkdtemp(prefix="events_stream_")
+    path = str(tmp_path_factory.mktemp("events_stream"))
     ev.write.mode("overwrite").parquet(path)
     return path
 
@@ -205,16 +203,14 @@ def test_running_aggregate_stateful(spark, events_stream):
         assert s == round(r["sum_value"], 6)
 
 
-def test_foreach_batch_sink(spark, events_stream):
+def test_foreach_batch_sink(spark, events_stream, tmp_path):
     """foreachBatch: custom batch-writer sink sees every row exactly once
     across availableNow micro-batches."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from spark_extensions_spark.streaming import run_foreach_batch
 
-    out_dir = tempfile.mkdtemp(prefix="fb_out_")
+    out_dir = str(tmp_path)
 
     def write_batch(batch_df, batch_id):
         batch_df.groupBy("event_type").agg(
@@ -267,12 +263,10 @@ def test_session_window_multibatch_merge(spark, events_stream):
     assert run(1) == run(None)
 
 
-def test_streaming_upsert_sink(spark, events_stream):
+def test_streaming_upsert_sink(spark, events_stream, tmp_path):
     """foreachBatch upsert sink: the final snapshot holds the
     order-cols-max row per key, independent of batch chopping, and
     matches the batch-mode answer."""
-    import tempfile
-
     from spark_extensions_spark.streaming import run_foreach_batch
     from spark_extensions_spark.streaming.incremental import (
         latest_per_key,
@@ -280,7 +274,7 @@ def test_streaming_upsert_sink(spark, events_stream):
         read_upsert_table,
     )
 
-    target = tempfile.mkdtemp(prefix="upsert_tgt_")
+    target = str(tmp_path)
     stream = read_stream_parquet(
         spark, events_stream, max_files_per_trigger=1
     )
@@ -333,18 +327,16 @@ def test_ewma_state_matches_batch_recursion(spark, events_stream):
     assert got == {k: y / 100 for k, y in ref.items()}
 
 
-def test_drift_monitor_scores_each_batch(spark, events_stream):
+def test_drift_monitor_scores_each_batch(spark, events_stream, tmp_path):
     """One TVD metrics row per micro-batch; the single-batch replay
     score equals the batch-twin TVD; idempotent on rerun."""
-    import tempfile
-
     from spark_extensions_spark.operators.stats import tvd_drift
     from spark_extensions_spark.streaming import read_stream_parquet
     from spark_extensions_spark.streaming.ops import drift_monitor
 
     ev = load_tables(spark, SF_DIR, "events")["events"]
     ref = ev.filter(F.col("user_id") % 2 == 0).select("event_type")
-    metrics = tempfile.mkdtemp(prefix="drift_metrics_")
+    metrics = str(tmp_path)
 
     stream = read_stream_parquet(spark, events_stream)
     drift_monitor(stream.select("event_type"), ref, "event_type", metrics)
@@ -367,12 +359,10 @@ def test_drift_monitor_scores_each_batch(spark, events_stream):
     assert all(0.0 <= v <= 1.0 for v in total.values())
 
 
-def test_scd2_stream_sink(spark, events_stream):
+def test_scd2_stream_sink(spark, events_stream, tmp_path):
     """CDC micro-batches historize into a versioned SCD2 target; the
     final open slice equals the batch latest-per-key survivors, and
     closed slices capture every overwritten value."""
-    import tempfile
-
     from spark_extensions_spark.streaming import (
         read_stream_parquet,
         run_foreach_batch,
@@ -383,7 +373,7 @@ def test_scd2_stream_sink(spark, events_stream):
         scd2_batch_fn,
     )
 
-    target = tempfile.mkdtemp(prefix="scd2_sink_")
+    target = str(tmp_path)
     stream = read_stream_parquet(
         spark, events_stream, max_files_per_trigger=1
     ).select(

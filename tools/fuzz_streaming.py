@@ -48,7 +48,6 @@ import os
 import random
 import shutil
 import sys
-import tempfile
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -56,6 +55,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from spark_extensions_spark.session import scratch_dir  # noqa: E402
 
 _EPOCH = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -515,7 +516,7 @@ def run_all(spark, n_per_class: dict[str, int] | None = None):
     for cls, fn in CASES.items():
         for seed in range(n_per_class.get(cls, 0)):
             total += 1
-            workdir = tempfile.mkdtemp(prefix=f"fzs_{cls}_{seed}_")
+            workdir = scratch_dir(f"fzs_{cls}_{seed}_")
             try:
                 got, want = fn(spark, seed, workdir)
                 if got != want:

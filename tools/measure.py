@@ -14,7 +14,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 from dataclasses import dataclass
 
@@ -23,6 +22,7 @@ from spark_extensions_spark.session import (
     ALL_TABLES,
     get_spark,
     load_tables,
+    scratch_dir,
 )
 
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -33,6 +33,22 @@ def session(app: str):
     # at bench SF is dominated by task scheduling, and AQE re-derives
     # parallelism from data size on a real cluster anyway.
     return get_spark(app, extra_conf={"spark.sql.shuffle.partitions": CPUS})
+
+
+def worker_pyspark(spark) -> str:
+    """Where the session's Python workers import pyspark from:
+    ``"installed"`` (a package directory, with bytecode) or ``"archive"``
+    (Spark's ``pyspark.zip``, compiled anew by each fresh interpreter)."""
+
+    def where(_):
+        import os
+
+        import pyspark
+
+        yield os.path.isfile(pyspark.__file__)
+
+    rdd = spark.sparkContext.parallelize([0], 1).mapPartitions(where)
+    return "installed" if rdd.first() else "archive"
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -66,7 +82,7 @@ def warm_up(spark, sf_dir: str) -> None:
         run_available_now,
     )
 
-    warm_dir = tempfile.mkdtemp(prefix="bench_warm_")
+    warm_dir = scratch_dir("bench_warm_")
     spark.range(64).select(
         (F.col("id") % 4).alias("k"), F.col("id").alias("v")
     ).write.mode("overwrite").parquet(warm_dir)

@@ -4,7 +4,8 @@ Optimization work needs to know WHERE a query's seconds go before
 touching it (guide §1). After bench.py's warm-up, in one session at the
 bench's plan width, each named query runs noop-sinked once cold
 (JVM/codegen warmup charged to run 1) and ``--repeat`` more times warm.
-For the last run it prints the wall, the job-time sum and the driver
+A header line names the master, the fixture dir and where the Python
+workers import pyspark from. For the last run it prints the wall, the job-time sum and the driver
 gap (wall outside every job: Python, commits, collects), then every job
 that took at least ``--min`` seconds — duration, task and stage count,
 shuffle read/write, spill and description. Iterative/streaming queries
@@ -34,7 +35,12 @@ sys.path.insert(0, ROOT)
 
 from perfbench.tracing import MIB  # noqa: E402
 from spark_extensions_spark.queries import registry  # noqa: E402
-from tools.measure import measure, session, warm_up  # noqa: E402
+from tools.measure import (  # noqa: E402
+    measure,
+    session,
+    warm_up,
+    worker_pyspark,
+)
 
 
 def main() -> int:
@@ -54,6 +60,11 @@ def main() -> int:
     by_name = {q.name: q for q in registry()}
     spark = session("profile")
     warm_up(spark, sf_dir)
+    print(
+        f"master {spark.sparkContext.master}, sf_dir {sf_dir}, "
+        f"worker_pyspark {worker_pyspark(spark)}",
+        flush=True,
+    )
     for name in names:
         try:
             runs = [

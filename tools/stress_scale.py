@@ -14,14 +14,17 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from spark_extensions_spark.session import get_spark, load_tables  # noqa: E402
+from spark_extensions_spark.session import (  # noqa: E402
+    get_spark,
+    load_tables,
+    scratch_dir,
+)
 
 
 def scaled(df, key_cols: dict[str, int], k: int):
@@ -60,7 +63,7 @@ def main() -> int:
         "events",
     )
 
-    base = tempfile.mkdtemp(prefix="stress_sf_")
+    base = scratch_dir("stress_sf_")
     docs_p = os.path.join(base, "documents")
     emb_p = os.path.join(base, "embeddings")
     li_p = os.path.join(base, "lineitem")

@@ -27,8 +27,6 @@ from spark_extensions_spark.operators.sketches import (
 from spark_extensions_spark.operators.similarity import (
     cosine_similarity_col,
     ann_bruteforce_topk,
-    ann_lsh_topk,
-    ann_ivf_topk,
     ann_lsh_topk_det,
     ann_ivf_topk_det,
     ann_ivfpq_topk_det,
@@ -100,8 +98,6 @@ __all__ = [
     "embedding_neardup_pairs",
     "cosine_similarity_col",
     "ann_bruteforce_topk",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
     "count_min_sketch",
     "bloom_filter",
     "bloom_semi_join",

@@ -474,32 +474,16 @@ def embedding_neardup_pairs(
     mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     order = np.argsort(ids)
     ids, mat = ids[order], mat[order]
-    n, d = mat.shape
     bc = spark.sparkContext.broadcast((ids, mat))
 
     def score(batches):
         ids_b, m = bc.value
-        nb, nd = m.shape
-        nrm2 = np.zeros(nb)
-        for i in range(nd):
-            nrm2 += m[:, i] * m[:, i]
-        nrm = np.sqrt(nrm2)
-        col_idx = np.arange(nb)
-        # block size bounded so the (block × corpus) dot matrix stays
-        # ~100 MB regardless of corpus size
-        block = max(64, int(1.2e7) // max(nb, 1))
+        col_idx = np.arange(m.shape[0])
         for pdf in batches:
             idxs_all = pdf["__idx"].to_numpy()
             frames = []
-            for s in range(0, len(idxs_all), block):
-                idxs = idxs_all[s : s + block]
-                a_blk = m[idxs]  # (mb, d)
-                dot = np.zeros((len(idxs), nb))
-                for i in range(nd):
-                    # per-dim outer-product accumulation: every pair's sum
-                    # keeps the sequential-fold IEEE order
-                    dot += np.outer(a_blk[:, i], m[:, i])
-                cos = dot / np.outer(nrm[idxs], nrm)
+            for s, cos in _cosine_chunks(m[idxs_all], m):
+                idxs = idxs_all[s : s + cos.shape[0]]
                 mask = (col_idx[None, :] > idxs[:, None]) & (cos >= threshold)
                 rsel, csel = np.nonzero(mask)
                 frames.append(
@@ -518,7 +502,7 @@ def embedding_neardup_pairs(
             )
 
     n_parts = max(2, spark.sparkContext.defaultParallelism)
-    idx_df = spark.range(0, n, 1, n_parts).select(
+    idx_df = spark.range(0, len(ids), 1, n_parts).select(
         F.col("id").cast("int").alias("__idx")
     )
     schema = f"id_a {id_type}, id_b {id_type}, cosine double"
@@ -611,25 +595,9 @@ def embedding_neardup_pairs_blocked(
         ids_b = b["__id"].to_numpy()
         ma = np.array([list(v) for v in a["__vec"]], dtype=np.float64)
         mb = np.array([list(v) for v in b["__vec"]], dtype=np.float64)
-        na, nd = ma.shape
-        nbr = mb.shape[0]
-        # per-dim accumulation keeps the sequential-fold IEEE order
-        nrm2_a = np.zeros(na)
-        nrm2_b = np.zeros(nbr)
-        for i in range(nd):
-            nrm2_a += ma[:, i] * ma[:, i]
-            nrm2_b += mb[:, i] * mb[:, i]
-        nrm_a, nrm_b = np.sqrt(nrm2_a), np.sqrt(nrm2_b)
         frames = []
-        # chunk the a side so the (chunk × nbr) dot matrix stays ~100 MB
-        chunk = max(64, int(1.2e7) // max(nbr, 1))
-        for s in range(0, na, chunk):
-            a_blk = ma[s : s + chunk]
-            dot = np.zeros((a_blk.shape[0], nbr))
-            for i in range(nd):
-                dot += np.outer(a_blk[:, i], mb[:, i])
-            cos = dot / np.outer(nrm_a[s : s + chunk], nrm_b)
-            ia = ids_a[s : s + chunk]
+        for s, cos in _cosine_chunks(ma, mb):
+            ia = ids_a[s : s + cos.shape[0]]
             # score only distinct unordered pairs once: ids differ AND
             # (off-diagonal groups hold disjoint blocks; the diagonal
             # group holds the same block on both sides, so keep a < b)
@@ -652,76 +620,38 @@ def embedding_neardup_pairs_blocked(
     return both.groupBy("__bi", "__bj").applyInPandas(score, schema)
 
 
-def embedding_neardup_pairs_ivf(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    threshold: float = 0.95,
-    n_lists: int = 16,
-) -> DataFrame:
-    """APPROXIMATE near-dup pairs via IVF coarse quantization.
+def _cosine_chunks(a, b):
+    """Exact cosine of every row of ``a`` against every row of ``b``,
+    yielded as ``(start, cos)`` for consecutive row chunks of ``a``
+    (``cos[i, j]`` scores ``a[start + i]`` against ``b[j]``).
 
-    The stand-in for :func:`embedding_neardup_pairs` when even the
-    blocked exact all-pairs (n²/B shuffle) is too expensive: vectors
-    are assigned to their nearest of ``n_lists`` deterministic
-    centroids (smallest-md5(id) corpus sample — no RNG state, same
-    scheme as ``operators/similarity.ann_ivf_topk``), and pairs are
-    scored only WITHIN a list — total work drops to ~n²/n_lists with
-    one shuffle on the list id. Pairs whose members quantize to
-    different lists are missed, so recall < 1 by design (bounded in
-    tests/test_operators.py); at genuine near-dup thresholds (≥0.9)
-    near-identical vectors co-quantize and recall is high.
-
-    Scores of emitted pairs are bit-identical to the exact paths (same
-    per-dim sequential-fold accumulation).
-    """
+    Per-dimension accumulation over the batch axis keeps each pair's
+    sum the same left-to-right IEEE sequence as the SQL fold (and the
+    DuckDB ``list_reduce`` oracle), and the final expression is
+    ``dot / (sqrt(na) * sqrt(nb))`` — so every embedding near-dup path
+    emits bit-identical cosines. Chunked so the (chunk × len(b)) dot
+    block stays ~100 MB regardless of input size."""
     import numpy as np
-    import pandas as pd
 
-    spark = df.sparkSession
-    id_type = df.schema[id_col].dataType.simpleString()
-    cent_rows = (
-        df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-        .withColumn("__r", F.md5(F.col("cid").cast("string")))
-        .orderBy("__r")
-        .limit(n_lists)
-        .collect()
-    )
-    centroids = np.array([list(r["cv"]) for r in cent_rows], dtype=np.float64)
-    cnorm = np.sqrt((centroids * centroids).sum(axis=1))
-    cnorm[cnorm == 0] = 1.0
-    bc = spark.sparkContext.broadcast((centroids, cnorm))
-
-    @F.pandas_udf("int")
-    def nearest_list(vecs: pd.Series) -> pd.Series:
-        C, cn = bc.value
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int32")
-        M = np.stack(vecs.to_numpy()).astype(np.float64)
-        nm = np.sqrt((M * M).sum(axis=1))
-        nm[nm == 0] = 1.0
-        sims = (M @ C.T) / np.outer(nm, cn)
-        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
-
-    assigned = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        nearest_list(F.col(vec_col)).alias("__list"),
-    )
-
-    schema = f"id_a {id_type}, id_b {id_type}, cosine double"
-    return assigned.groupBy("__list").applyInPandas(
-        _pairwise_cosine_kernel(threshold), schema
-    )
+    nd = a.shape[1]
+    nrm2_a = np.zeros(a.shape[0])
+    nrm2_b = np.zeros(b.shape[0])
+    for i in range(nd):
+        nrm2_a += a[:, i] * a[:, i]
+        nrm2_b += b[:, i] * b[:, i]
+    nrm_a, nrm_b = np.sqrt(nrm2_a), np.sqrt(nrm2_b)
+    chunk = max(64, int(1.2e7) // max(b.shape[0], 1))
+    for s in range(0, a.shape[0], chunk):
+        blk = a[s : s + chunk]
+        dot = np.zeros((blk.shape[0], b.shape[0]))
+        for i in range(nd):
+            dot += np.outer(blk[:, i], b[:, i])
+        yield s, dot / np.outer(nrm_a[s : s + chunk], nrm_b)
 
 
 def _pairwise_cosine_kernel(threshold: float):
     """applyInPandas kernel: all (id_a < id_b) pairs within one group
-    with exact-fold cosine ≥ threshold. Per-dimension accumulation over
-    the batch axis keeps each pair's sum the same left-to-right IEEE
-    sequence as the SQL fold (bit-identical to the exact paths); chunked
-    so the dot block stays ~100 MB regardless of group size."""
+    with exact-fold cosine ≥ threshold (see :func:`_cosine_chunks`)."""
     import numpy as np
     import pandas as pd
 
@@ -731,20 +661,9 @@ def _pairwise_cosine_kernel(threshold: float):
             return empty
         ids = pdf["__id"].to_numpy()
         m = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
-        n, nd = m.shape
-        nrm2 = np.zeros(n)
-        for i in range(nd):
-            nrm2 += m[:, i] * m[:, i]
-        nrm = np.sqrt(nrm2)
         frames = []
-        chunk = max(64, int(1.2e7) // n)
-        for s in range(0, n, chunk):
-            blk = m[s : s + chunk]
-            dot = np.zeros((blk.shape[0], n))
-            for i in range(nd):
-                dot += np.outer(blk[:, i], m[:, i])
-            cos = dot / np.outer(nrm[s : s + chunk], nrm)
-            ia = ids[s : s + chunk]
+        for s, cos in _cosine_chunks(m, m):
+            ia = ids[s : s + cos.shape[0]]
             mask = (ia[:, None] < ids[None, :]) & (cos >= threshold)
             rsel, csel = np.nonzero(mask)
             if rsel.size:
@@ -770,16 +689,26 @@ def embedding_neardup_pairs_ivf_det(
     threshold: float = 0.95,
     n_lists: int = 16,
 ) -> DataFrame:
-    """DETERMINISTIC variant of :func:`embedding_neardup_pairs_ivf`:
-    list assignment is exact int64 squared-L2 against an md5-picked
+    """APPROXIMATE near-dup pairs via deterministic IVF coarse
+    quantization.
+
+    The stand-in for :func:`embedding_neardup_pairs` when even the
+    blocked exact all-pairs (n²/B shuffle) is too expensive: vectors are
+    assigned to the nearest of ``n_lists`` centroids and pairs are scored
+    only WITHIN a list — total work drops to ~n²/n_lists with one
+    shuffle on the list id. Pairs whose members quantize to different
+    lists are missed, so recall < 1 by design (bounded in
+    tests/test_operators.py); at genuine near-dup thresholds (≥0.9)
+    near-identical vectors co-quantize and recall is high.
+
+    List assignment is exact int64 squared-L2 against an md5-picked
     fixed-point codebook (``operators/similarity.ivf_assign_expr``), so
     which pairs co-quantize — and therefore the whole approximate
     result — is bit-reproducible on any engine and the query is fully
     hash-checkable against a SQL oracle. Pair scoring is the same
-    exact-fold cosine as every other embedding path.
-
-    Scale shape unchanged: codebook collect is n_lists rows, assignment
-    is row-local codegen, one shuffle on the list id, ~n²/n_lists work.
+    exact-fold cosine as every other embedding path (bit-identical to
+    the exact methods). The codebook collect is n_lists rows and
+    assignment is row-local codegen.
     """
     from spark_extensions_spark.operators.similarity import (
         ivf_assign_expr,

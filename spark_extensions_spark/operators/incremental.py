@@ -347,49 +347,33 @@ def agg_refresh(
 # CDC state table maintained from a change stream (foreachBatch target)
 # ---------------------------------------------------------------------
 
-def _read_state_version_dir(spark, version_dir: str) -> DataFrame:
-    """Load one committed state version: a bucketed version carries a
-    ``manifest.json`` mapping key-hash buckets to parquet dirs (touched
-    buckets live under this version, untouched ones are shared with
-    earlier versions — bucket-level copy-on-write) and the state's
-    schema, which the read uses instead of inferring it in a Spark job;
-    a legacy version is a plain full-snapshot parquet dir."""
+def _read_manifest(version_dir: str) -> dict:
     import json as _json
     import os
 
-    mpath = os.path.join(version_dir, "manifest.json")
-    if not os.path.exists(mpath):
-        return spark.read.parquet(version_dir)
-    with open(mpath) as f:
-        manifest = _json.load(f)
+    with open(os.path.join(version_dir, "manifest.json")) as f:
+        return _json.load(f)
+
+
+def _read_state_version_dir(spark, version_dir: str) -> DataFrame:
+    """Load one committed state version: its ``manifest.json`` maps
+    key-hash buckets to parquet dirs (touched buckets live under this
+    version, untouched ones are shared with earlier versions —
+    bucket-level copy-on-write) and holds the state's schema, which the
+    read uses instead of inferring it in a Spark job."""
+    manifest = _read_manifest(version_dir)
     paths = sorted(manifest["buckets"].values())
     if not paths:
         return spark.createDataFrame([], manifest["schema"])
     return spark.read.schema(manifest["schema"]).parquet(*paths)
 
 
-def _read_manifest(version_dir: str) -> dict | None:
-    import json as _json
-    import os
-
-    mpath = os.path.join(version_dir, "manifest.json")
-    if not os.path.exists(mpath):
-        return None
-    with open(mpath) as f:
-        return _json.load(f)
-
-
 def read_cdc_state(spark, state_dir: str) -> DataFrame | None:
     """Current state snapshot, or None before the first apply. The
     pointer file names the live version directory — readers never see
     a half-written snapshot."""
-    import os
-
-    ptr = os.path.join(state_dir, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return _read_state_version_dir(spark, f.read().strip())
+    version = _current_version(state_dir)
+    return None if version is None else _read_state_version_dir(spark, version)
 
 
 def _bucket_expr(keys: list[str], n_buckets: int) -> Column:
@@ -471,12 +455,8 @@ def apply_cdc_batch(
     version = os.path.join(state_dir, f"v-{uuid.uuid4().hex}")
     data_dir = os.path.join(version, "data")
 
-    if base_version is None:
+    if base_manifest is None:
         cur_touched = None
-    elif base_manifest is None:
-        # legacy full-snapshot base: one migration pass reads it whole
-        cur_touched = spark.read.parquet(base_version)
-        touched = list(range(n_buckets))
     else:
         paths = [
             base_manifest["buckets"][str(b)]
@@ -692,10 +672,7 @@ def vacuum_state(state_dir: str, keep: int = 2) -> int:
     frontier = list(retain)
     while frontier:
         v = frontier.pop()
-        m = _read_manifest(v)
-        if m is None:
-            continue
-        for path in m["buckets"].values():
+        for path in _read_manifest(v)["buckets"].values():
             ref = path
             while os.path.dirname(ref) not in (state_dir, ref, ""):
                 ref = os.path.dirname(ref)

@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force exact cosine top-k as the correctness baseline, plus an
-LSH-bucketed approximate variant as the scale path. The exact path keeps
-the dot product in a *sequential* fold (``aggregate`` over
+Brute-force exact cosine top-k as the correctness baseline, plus
+deterministic LSH, IVF and IVF-PQ variants as the scale paths. The exact
+path keeps the dot product in a *sequential* fold (``aggregate`` over
 ``zip_with``) so the IEEE summation order is fixed and results are
 bit-reproducible across engines (the DuckDB oracle mirrors it with
 ``list_reduce``).
@@ -11,10 +11,12 @@ Scale shapes:
 - ``ann_bruteforce_topk``: broadcast the (small) query set, stream the
   corpus once, per-query top-k via window — no corpus shuffle beyond the
   final top-k (which AQE handles as a skewless keyed shuffle on query id).
-- ``ann_lsh_topk``: random-hyperplane signatures bucket the corpus; only
-  same-bucket candidates are scored. Plane matrix is derived from a seed
-  on the driver and broadcast inside a pandas UDF closure — deterministic
-  and O(dim × n_planes) memory.
+- ``ann_lsh_topk_det`` / ``ann_ivf_topk_det`` / ``ann_ivfpq_topk_det``:
+  bucket or list assignment is exact integer math over fixed-point
+  vectors and md5-picked planes/codebooks, so candidate sets — and the
+  whole approximate result — are bit-reproducible on any engine and
+  hash-checkable against a SQL oracle. Candidates are scored with the
+  exact cosine of :func:`cosine_pandas_cols`.
 """
 
 from __future__ import annotations
@@ -97,7 +99,6 @@ def ann_bruteforce_topk(
     query_vec_col: str,
     k: int,
     dim: int,
-    scorer: str = "jvm",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -106,18 +107,13 @@ def ann_bruteforce_topk(
     the deterministic cosine fold, then keeps the top k per query with a
     ``(cosine DESC, id)`` deterministic ordering.
 
-    ``scorer``: ``"jvm"`` (default) evaluates one codegen'd fold dot per
-    pair with the norms HOISTED — each side's ``sqrt(Σx²)`` is computed
-    once per vector before the join, not per pair — so the query never
-    leaves the JVM: no Arrow transfer of the corpus, no Python-worker
-    pool dependence (whose fork/reap state made this query's wall time
-    order-dependent in suite runs).  ``"pandas"`` scores pairs in an
-    Arrow-batched numpy kernel — ~10× the per-pair throughput of the
-    interpreted fold once the corpus→Arrow transfer amortizes; the
-    right regime is huge pair counts (≳10⁷: many queries × large
-    corpus).  Both produce BIT-IDENTICAL cosines: hoisting the norm is
-    the same IEEE sequence per pair, and the numpy kernel accumulates
-    in the same dimension order (see :func:`cosine_pandas_cols`).
+    Each pair is one codegen'd fold dot with the norms HOISTED — each
+    side's ``sqrt(Σx²)`` is computed once per vector before the join,
+    not per pair — so the query never leaves the JVM: no Arrow transfer
+    of the corpus, no Python-worker pool dependence (whose fork/reap
+    state made this query's wall time order-dependent in suite runs).
+    Hoisting the norm is the same IEEE sequence per pair, so the cosines
+    are bit-identical to :func:`cosine_pandas_cols`.
 
     Output: ``(query_id, neighbor_id, cosine, rank)``.
     """
@@ -132,193 +128,13 @@ def ann_bruteforce_topk(
     c = ensure_parallelism(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
     )
-    if scorer == "jvm":
-        q = q.withColumn(
-            "__qn", F.expr(f"sqrt({dot_expr_sql('qv', 'qv', dim)})")
-        )
-        c = c.withColumn(
-            "__cn", F.expr(f"sqrt({dot_expr_sql('cv', 'cv', dim)})")
-        )
-        cosine = (
-            F.expr(dot_expr_sql("qv", "cv", dim))
-            / (F.col("__qn") * F.col("__cn"))
-        )
-    elif scorer == "pandas":
-        cosine = cosine_pandas_cols(F.col("qv"), F.col("cv"))
-    else:
-        raise ValueError(f"scorer must be 'jvm' or 'pandas', got {scorer!r}")
+    q = q.withColumn("__qn", F.expr(f"sqrt({dot_expr_sql('qv', 'qv', dim)})"))
+    c = c.withColumn("__cn", F.expr(f"sqrt({dot_expr_sql('cv', 'cv', dim)})"))
+    cosine = F.expr(dot_expr_sql("qv", "cv", dim)) / (F.col("__qn") * F.col("__cn"))
     scored = F.broadcast(q).crossJoin(c).select(
         "query_id",
         "neighbor_id",
         cosine.alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int):
-    """Deterministic random hyperplanes (driver-side, tiny)."""
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((n_planes, dim)).astype("float64")
-
-
-def lsh_bucket_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """Pandas UDF: sign-of-projection LSH bucket id for an embedding col.
-
-    Arrow-batched; the plane matrix lives in the UDF closure (broadcast
-    with the serialized task, ~dim×n_planes×8 bytes).
-    """
-    from pyspark.sql.types import LongType
-
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.apply(lambda v: np.asarray(v, dtype="float64")))
-        signs = (mat @ planes.T) >= 0.0
-        weights = (1 << np.arange(n_planes, dtype="int64"))
-        return pd.Series((signs * weights).sum(axis=1).astype("int64"))
-
-    return bucket
-
-
-def ann_lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    k: int,
-    dim: int,
-    n_planes: int = 12,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: score only same-LSH-bucket candidates.
-
-    One shuffle on the bucket id for both sides; within-bucket scoring
-    uses the same deterministic cosine as the exact path. Recall tunes
-    with ``n_planes`` (fewer planes → bigger buckets → higher recall &
-    cost). Multi-probe (flipping one bit) can be added by exploding a
-    small array of probe buckets per query — kept single-probe here.
-    """
-    from spark_extensions_spark.session import ensure_parallelism
-
-    bucketize = lsh_bucket_udf(dim, n_planes, seed)
-    # small query sides auto-broadcast, so bucketing + scoring run in
-    # the corpus scan's stage — widen a one-row-group corpus first
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        bucketize(F.col(vec_col)).alias("bucket"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-        bucketize(F.col(query_vec_col)).alias("bucket"),
-    )
-    scored = q.join(c, "bucket").select(
-        "query_id",
-        "neighbor_id",
-        cosine_pandas_cols(F.col("qv"), F.col("cv")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def ann_ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    k: int,
-    dim: int,
-    n_lists: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Approximate top-k via IVF-flat (inverted-file) partitioning.
-
-    The 100 TB shape of ANN search:
-
-    1. **Coarse quantizer** — ``n_lists`` centroids chosen
-       deterministically from the corpus (rows with the smallest
-       ``md5(id)``, i.e. a uniform pseudo-random sample with no RNG
-       state); tiny, broadcast to every task.
-    2. **Assignment** — one Arrow-batched pass tags each corpus vector
-       with its nearest-centroid ``list_id``. At scale this column is
-       written once and the corpus is bucketed/partitioned by it.
-    3. **Probe** — each query explodes to its ``n_probe`` nearest
-       centroid lists, joins corpus rows on ``list_id`` (one shuffle,
-       keyed by list), scores only those candidates (~n_probe/n_lists of
-       the corpus), then windows the top k.
-
-    Scoring uses the same deterministic cosine as the exact path, so
-    results are reproducible run-to-run; recall tunes with ``n_probe``.
-    """
-    spark = corpus.sparkSession
-    cent_rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-        .withColumn("__r", F.md5(F.col("cid").cast("string")))
-        .orderBy("__r")
-        .limit(n_lists)
-        .collect()
-    )
-    centroids = np.array([list(r["cv"]) for r in cent_rows], dtype=np.float64)
-    cnorm = np.sqrt((centroids * centroids).sum(axis=1))
-    bc = spark.sparkContext.broadcast((centroids, cnorm))
-
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    def _nearest_lists(vecs: pd.Series, n: int):
-        cents, cn = bc.value
-        mat = np.stack(vecs.apply(lambda v: np.asarray(v, dtype="float64")))
-        sims = (mat @ cents.T) / (
-            np.sqrt((mat * mat).sum(axis=1))[:, None] * cn[None, :]
-        )
-        # stable order: similarity desc, list id asc
-        order = np.lexsort((np.arange(sims.shape[1])[None, :].repeat(len(mat), 0), -sims))
-        return order[:, :n]
-
-    @F.pandas_udf(IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        return pd.Series(_nearest_lists(vecs, 1)[:, 0].astype("int32"))
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def probe(vecs: pd.Series) -> pd.Series:
-        return pd.Series(list(_nearest_lists(vecs, n_probe).astype("int32")))
-
-    from spark_extensions_spark.session import ensure_parallelism
-
-    # Arrow assignment + scoring run in the corpus scan's stage when the
-    # probed query side broadcasts — widen a one-row-group corpus first
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        assign(F.col(vec_col)).alias("list_id"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-        F.explode(probe(F.col(query_vec_col))).alias("list_id"),
-    )
-    scored = q.join(c, "list_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine_pandas_cols(F.col("qv"), F.col("cv")).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -454,178 +270,6 @@ def quantize_oracle_sql(
 
 
 # ---------------------------------------------------------------------
-# IVF-PQ: product-quantized ANN with ADC scoring + exact rerank
-# ---------------------------------------------------------------------
-
-
-def _pq_train(
-    sample: np.ndarray, m: int, ksub: int, iters: int = 3
-) -> np.ndarray:
-    """Train PQ codebooks on a sample: per-subspace Lloyd k-means.
-
-    Deterministic: the first ``ksub`` sample rows seed each subspace,
-    fixed iteration count, ties broken by lowest centroid index
-    (argmin).  Returns (m, ksub, dsub) float64.
-    """
-    n, dim = sample.shape
-    dsub = dim // m
-    books = np.empty((m, ksub, dsub), dtype=np.float64)
-    for s in range(m):
-        sub = sample[:, s * dsub : (s + 1) * dsub]
-        cents = sub[:ksub].copy()
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(ksub):
-                mask = a == c
-                if mask.any():
-                    cents[c] = sub[mask].mean(axis=0)
-        books[s] = cents
-    return books
-
-
-def ann_ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    k: int,
-    dim: int,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    ksub: int = 16,
-    train_sample: int = 2048,
-    rerank: int = 64,
-) -> DataFrame:
-    """Approximate top-k via IVF + product quantization — the FAISS
-    IVFPQ shape (Jégou et al. 2011), Spark-first:
-
-    1. **Coarse IVF** — hash-min-sampled centroids (broadcast), corpus
-       tagged with ``list_id`` in one Arrow pass; queries probe their
-       ``n_probe`` nearest lists (identical to ann_ivf_topk).
-    2. **PQ codebooks** — trained driver-side on a bounded hash-min
-       SAMPLE (standard practice: PQ training reads a sample, never
-       the corpus), ``m`` subspaces × ``ksub`` centroids, deterministic
-       Lloyd iterations; broadcast (m·ksub·dim/m doubles — tiny).
-    3. **Encode** — one Arrow pass maps each corpus vector to ``m``
-       uint8 codes: the 100 TB index column (dim×4 bytes → m bytes,
-       32× for 64-dim float32 → 8 codes).
-    4. **ADC scoring** — per query, a (m × ksub) dot-product lookup
-       table; candidate score = Σ_s LUT[s, code_s].  Python only in
-       the Arrow-batched stages; the probe join is a JVM hash join
-       keyed by list_id.
-    5. **Exact rerank** — the ADC top-``rerank`` per query rescored
-       with the deterministic exact cosine, then the final top-k —
-       the standard recall repair.
-
-    Output: (query_id, neighbor_id, cosine, rank) — reproducible
-    run-to-run (every stage deterministic).
-    """
-    spark = corpus.sparkSession
-
-    samp_rows = (
-        corpus.select(F.col(id_col).alias("sid"), F.col(vec_col).alias("sv"))
-        .withColumn("__r", F.md5(F.col("sid").cast("string")))
-        .orderBy("__r", "sid")
-        .limit(max(train_sample, n_lists))
-        .collect()
-    )
-    samp = np.array([list(r["sv"]) for r in samp_rows], dtype=np.float64)
-    coarse = samp[:n_lists].copy()
-    cnorm = np.sqrt((coarse * coarse).sum(axis=1))
-    books = _pq_train(samp, m, ksub)
-    bc = spark.sparkContext.broadcast((coarse, cnorm, books))
-
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    dsub = dim // m
-
-    def _nearest_lists(vecs: pd.Series, n: int):
-        cents, cn, _ = bc.value
-        mat = np.stack(vecs.apply(lambda v: np.asarray(v, dtype="float64")))
-        sims = (mat @ cents.T) / (
-            np.sqrt((mat * mat).sum(axis=1))[:, None] * cn[None, :]
-        )
-        order = np.lexsort(
-            (np.arange(sims.shape[1])[None, :].repeat(len(mat), 0), -sims)
-        )
-        return order[:, :n]
-
-    @F.pandas_udf(IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        return pd.Series(_nearest_lists(vecs, 1)[:, 0].astype("int32"))
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def probe(vecs: pd.Series) -> pd.Series:
-        return pd.Series(list(_nearest_lists(vecs, n_probe).astype("int32")))
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def encode(vecs: pd.Series) -> pd.Series:
-        _, _, bks = bc.value
-        mat = np.stack(vecs.apply(lambda v: np.asarray(v, dtype="float64")))
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for s in range(m):
-            sub = mat[:, s * dsub : (s + 1) * dsub]
-            d2 = ((sub[:, None, :] - bks[s][None, :, :]) ** 2).sum(axis=2)
-            codes[:, s] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    @F.pandas_udf("double")
-    def adc(qvs: pd.Series, codes: pd.Series) -> pd.Series:
-        _, _, bks = bc.value
-        out = np.empty(len(qvs))
-        for i, (qv, cd) in enumerate(zip(qvs, codes)):
-            q = np.asarray(qv, dtype="float64")
-            s = 0.0
-            for j in range(m):
-                s += float(bks[j][cd[j]] @ q[j * dsub : (j + 1) * dsub])
-            out[i] = s
-        return pd.Series(out)
-
-    from spark_extensions_spark.session import ensure_parallelism
-
-    # Arrow assign/encode + ADC run in the corpus scan's stage when the
-    # probed query side broadcasts — widen a one-row-group corpus first
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        assign(F.col(vec_col)).alias("list_id"),
-        encode(F.col(vec_col)).alias("codes"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-        F.explode(probe(F.col(query_vec_col))).alias("list_id"),
-    )
-    cand = q.join(c, "list_id").select(
-        "query_id", "qv", "neighbor_id", "cv",
-        adc(F.col("qv"), F.col("codes")).alias("adc"),
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = cand.withColumn("r0", F.row_number().over(w_adc)).filter(
-        F.col("r0") <= rerank
-    )
-    rescored = shortlist.select(
-        "query_id",
-        "neighbor_id",
-        cosine_pandas_cols(F.col("qv"), F.col("cv")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-# ---------------------------------------------------------------------
 # Deterministic sign-plane LSH (oracle-checkable bucketing)
 # ---------------------------------------------------------------------
 
@@ -725,11 +369,12 @@ def ann_lsh_topk_det(
 ) -> DataFrame:
     """Approximate top-k via DETERMINISTIC sign-plane LSH buckets.
 
-    Same shape as :func:`ann_lsh_topk` (bucket both sides, one keyed
-    shuffle, score only same-bucket candidates, window top-k) but the
-    bucketing is exact integer math over md5-derived ±1 planes — fully
-    reproducible across engines, so the whole approximate query is
-    hash-checkable against a SQL oracle, not just rows-counted. The
+    Bucket both sides, one keyed shuffle, score only same-bucket
+    candidates, window top-k. The bucketing is exact integer math over
+    md5-derived ±1 planes (sign-of-projection LSH, Charikar 2002) —
+    fully reproducible across engines, so the whole approximate query is
+    hash-checkable against a SQL oracle, not just rows-counted. Recall
+    tunes with ``n_planes`` (fewer planes → bigger buckets). The
     scale path is unchanged: bucket ids are computed row-locally inside
     codegen (no Python), and at 100 TB the corpus bucketing is a column
     you persist once.
@@ -783,9 +428,9 @@ def ivf_centroids_det(
 ) -> list[list[int]]:
     """Deterministic IVF coarse-quantizer codebook: the ``n_lists``
     corpus rows with the smallest ``md5(id)`` (a uniform pseudo-random
-    sample with no RNG state — same scheme as ``ann_ivf_topk``),
-    QUANTIZED to fixed-point int64 so every later distance is exact
-    integer math. Returned list index IS the list id.
+    sample with no RNG state), QUANTIZED to fixed-point int64 so every
+    later distance is exact integer math. Returned list index IS the
+    list id.
 
     The collect is bounded at ``n_lists`` rows (16ish) regardless of
     corpus size — this is codebook training, not data movement.
@@ -870,10 +515,10 @@ def ann_ivf_topk_det(
 ) -> DataFrame:
     """Approximate top-k via DETERMINISTIC IVF-flat partitioning.
 
-    Same inverted-file shape as :func:`ann_ivf_topk` — coarse codebook,
-    row-local list assignment, probe-list candidate join — but the
-    quantizer is exact integer math over an md5-picked codebook, so list
-    membership (and therefore the whole approximate result) is
+    The inverted-file shape — coarse codebook, row-local list
+    assignment, each query probing its ``n_probe`` nearest lists — with
+    a quantizer that is exact integer math over an md5-picked codebook,
+    so list membership (and therefore the whole approximate result) is
     bit-reproducible on any engine and the query is fully
     hash-checkable against a SQL oracle. Assignment uses squared-L2 on
     fixed-point vectors (the classic IVF metric, Jégou et al. 2011);
@@ -1084,10 +729,10 @@ def ann_ivfpq_topk_det(
 ) -> DataFrame:
     """Approximate top-k via DETERMINISTIC IVF-PQ (Jégou et al. 2011).
 
-    Same FAISS-shape stages as :func:`ann_ivfpq_topk` — coarse IVF
-    probe join, product-quantized codes, ADC shortlist, exact-cosine
-    rerank — but every stage before the rerank is exact integer math
-    over md5-derived codebooks, so the shortlist (and therefore the
+    The FAISS IVFPQ stages — coarse IVF probe join, product-quantized
+    codes, ADC shortlist, exact-cosine rerank of the top ``rerank``
+    candidates — where every stage before the rerank is exact integer
+    math over md5-derived codebooks, so the shortlist (and therefore the
     final result) is bit-reproducible on any engine and the query is
     fully hash-checkable against a SQL oracle.
 

@@ -30,10 +30,7 @@ from spark_extensions_spark.operators.dedup import (
     ngram_jaccard_pairs,
     embedding_neardup_pairs,
 )
-from spark_extensions_spark.operators.similarity import (
-    ann_bruteforce_topk,
-    ann_lsh_topk,
-)
+from spark_extensions_spark.operators.similarity import ann_bruteforce_topk
 from spark_extensions_spark.functions.text import (
     lang_id,
     lang_id_oracle_sql,

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from spark_extensions_spark.functions.fixedpoint import fp_col
 from spark_extensions_spark.queries import _register, _t
+from spark_extensions_spark.session import conf_override
 
 
 @_register(
@@ -2060,16 +2061,14 @@ def q_catalog_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.select("event_id", "event_type").write.partitionBy(
         "event_type"
     ).saveAsTable(name)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_override(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         spark.sql(
             f"INSERT OVERWRITE TABLE {name} "
             "SELECT event_id, event_type FROM events "
             "WHERE event_type = 'click' AND event_id % 2 = 0"
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return spark.table(name).groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )

@@ -32,6 +32,7 @@ deployment while staying correct on ``local[N]`` test runs:
 from __future__ import annotations
 
 import atexit
+import contextlib
 import os
 import shutil
 import tempfile
@@ -124,6 +125,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def conf_override(spark: SparkSession, conf: dict):
+    """Set runtime SQL confs for the body of a ``with`` block and put
+    each key back on exit: a key that was set gets its old value, a key
+    that was unset is unset again. A ``None`` value leaves its key
+    alone, so callers can pass optional settings straight through."""
+    conf = {k: str(v) for k, v in conf.items() if v is not None}
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def recommended_conf(

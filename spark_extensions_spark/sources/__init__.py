@@ -24,8 +24,6 @@ _EXPORTS = {
     "read_table": "spark_extensions_spark.sources.io",
     "overwrite_partitions": "spark_extensions_spark.sources.io",
     "write_table": "spark_extensions_spark.sources.io",
-    "kafka_stream_reader": "spark_extensions_spark.sources.io",
-    "kafka_writer": "spark_extensions_spark.sources.io",
 }
 
 __all__ = sorted(_EXPORTS)

@@ -28,7 +28,7 @@ Fidelity notes:
 - The source schema is byte-for-byte Kafka's: ``key binary, value
   binary, topic string, partition int, offset bigint, timestamp
   timestamp, timestampType int``.
-- The default partitioner is Kafka's Java client default:
+- The partitioner is Kafka's Java client default:
   ``murmur2(keyBytes) & 0x7fffffff % numPartitions`` (public algorithm,
   org.apache.kafka.common.utils.Utils#murmur2). Null keys all land in
   one partition (modern Kafka sticky-partitions them; a log emulation
@@ -259,7 +259,6 @@ def produce(
     key_col: str = "key",
     value_col: str = "value",
     ts_col: str | None = None,
-    partitioner: str = "murmur2",
 ):
     """Append a DataFrame of (key, value[, timestamp]) messages to a
     file topic with Kafka-default key placement and per-partition
@@ -272,12 +271,8 @@ def produce(
     deterministic. Returns {pid: (base_offset, count)} (bounded:
     num_partitions rows).
 
-    ``partitioner``: ``"murmur2"`` (default) matches the Kafka Java
-    client's placement exactly via an Arrow-batched Python hash;
-    ``"xxhash64"`` stays entirely JVM-side (codegen'd, no Python in
-    the placement pass) — the scale choice when only affinity matters,
-    not cross-system placement compatibility. Both are stable, so a
-    topic must keep one partitioner for its lifetime.
+    Placement is the Kafka Java client's murmur2, computed exactly by
+    an Arrow-batched Python hash.
     """
     # bind pandas as a module global on first use: produce() is the
     # only pandas consumer here, and pandas_udf resolves the stringized
@@ -312,28 +307,16 @@ def produce(
 
     parts = num_partitions
 
-    if partitioner == "murmur2":
+    @F.pandas_udf("int")
+    def _placement(key: pd.Series) -> pd.Series:
+        # one murmur2 per DISTINCT key per batch (keys are entity
+        # ids and repeat heavily; the hash was the per-row cost)
+        place = _memoized_placement(parts)
+        return key.map(
+            lambda k: place(None if k is None else bytes(k))
+        ).astype("int32")
 
-        @F.pandas_udf("int")
-        def _placement(key: pd.Series) -> pd.Series:
-            # one murmur2 per DISTINCT key per batch (keys are entity
-            # ids and repeat heavily; the hash was the per-row cost)
-            place = _memoized_placement(parts)
-            return key.map(
-                lambda k: place(None if k is None else bytes(k))
-            ).astype("int32")
-
-        pid_col = _placement(F.col("key"))
-    elif partitioner == "xxhash64":
-        pid_col = (
-            F.when(F.col("key").isNull(), F.lit(0))
-            .otherwise(F.pmod(F.xxhash64(F.col("key")), F.lit(parts)))
-            .cast("int")
-        )
-    else:
-        raise ValueError(f"unknown partitioner {partitioner!r}")
-
-    placed = msgs.withColumn("pid", pid_col)
+    placed = msgs.withColumn("pid", _placement(F.col("key")))
 
     def _append(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["pid"].iloc[0])

@@ -2,9 +2,8 @@
 
 Format surface per SURVEY.md §2.E "Scans/sources"/"Sinks": parquet, csv,
 json, orc, text, avro (needs the spark-avro connector jar on the
-cluster; absent in this test container), jdbc, kafka — all via the
-public ``spark.read`` / ``df.write`` / ``readStream`` / ``writeStream``
-API so Catalyst keeps predicate pushdown, column pruning and partition
+cluster), jdbc — all via the public ``spark.read`` / ``df.write`` API
+so Catalyst keeps predicate pushdown, column pruning and partition
 pruning on every path.
 
 ``cloud_committer_conf`` replaces the reference's committer classes
@@ -22,6 +21,8 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from spark_extensions_spark.session import conf_override
 
 BATCH_FORMATS = {"parquet", "csv", "json", "orc", "text", "avro"}
 
@@ -113,57 +114,6 @@ def cloud_committer_conf(
     return conf
 
 
-def _require_kafka(spark: SparkSession) -> None:
-    jars = spark.sparkContext._jsc.sc().listJars().mkString(",")
-    if "spark-sql-kafka" not in jars:
-        raise RuntimeError(
-            "Kafka connector (spark-sql-kafka-0-10) is not on the classpath; "
-            "submit with --packages org.apache.spark:spark-sql-kafka-0-10_2.13"
-        )
-
-
-def kafka_stream_reader(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topics: str,
-    starting_offsets: str = "latest",
-    **options: Any,
-):
-    """Streaming Kafka source: yields key/value BinaryType columns the
-    Confluent codecs (:mod:`spark_extensions_spark.confluent`) decode."""
-    _require_kafka(spark)
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def kafka_writer(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    **options: Any,
-):
-    """Streaming Kafka sink: expects ``key``/``value`` binary columns
-    (e.g. from ``to_confluent_avro``)."""
-    _require_kafka(df.sparkSession)
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    return writer
-
-
 def overwrite_partitions(
     df: DataFrame,
     path: str,
@@ -180,16 +130,12 @@ def overwrite_partitions(
     harness's) keep their own static default, where overwrite replaces
     the whole table.
     """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try:
+    with conf_override(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         (
             df.write.format(fmt)
             .mode("overwrite")
             .partitionBy(*partition_by)
             .save(path)
         )
-    finally:
-        spark.conf.set(key, prev)

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from spark_extensions_spark.session import scratch_dir
+from spark_extensions_spark.session import conf_override, scratch_dir
 
 
 def read_stream_parquet(
@@ -165,16 +165,13 @@ def run_available_now(
     spark = result.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = checkpoint_dir or scratch_dir("ckpt_")
-    prev = None
-    prev_provider = None
-    _prov_key = "spark.sql.streaming.stateStore.providerClass"
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if state_store_provider is not None:
-        prev_provider = spark.conf.get(_prov_key, None)
-        spark.conf.set(_prov_key, state_store_provider)
-    try:
+    with conf_override(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": state_partitions,
+            "spark.sql.streaming.stateStore.providerClass": state_store_provider,
+        },
+    ):
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -184,14 +181,6 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if state_store_provider is not None:
-            if prev_provider is None:
-                spark.conf.unset(_prov_key)
-            else:
-                spark.conf.set(_prov_key, prev_provider)
     return spark.table(name)
 
 
@@ -279,13 +268,9 @@ def run_available_now_to_dir(
     against what earlier runs buffered.
     """
     spark = result.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(state_partitions)
-        )
-    try:
+    with conf_override(
+        spark, {"spark.sql.shuffle.partitions": state_partitions}
+    ):
         q = (
             result.writeStream.format("parquet")
             .option("path", out_dir)
@@ -295,9 +280,6 @@ def run_available_now_to_dir(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def read_state(

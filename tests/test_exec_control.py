@@ -134,6 +134,33 @@ def test_python_datasource_stream(spark):
     assert rows == list(range(100))
 
 
+def test_conf_override_restores_set_and_unset_keys(spark):
+    """conf_override puts a set key back to its old value, unsets a key
+    that was unset, leaves ``None`` entries alone, and restores on an
+    exception too."""
+    import pytest
+
+    from spark_extensions_spark.session import conf_override
+
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.sql.graft.test.confOverrideUnsetKey"
+    untouched = "spark.sql.session.timeZone"
+    before = spark.conf.get(set_key)
+    zone = spark.conf.get(untouched)
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError):
+        with conf_override(
+            spark, {set_key: 3, unset_key: "dynamic", untouched: None}
+        ):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(unset_key) == "dynamic"
+            assert spark.conf.get(untouched) == zone
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(untouched) == zone
+
+
 def test_cache_and_unpersist(spark, sf_dir):
     """df.cache(): the second action reads an InMemoryTableScan;
     unpersist removes it."""

@@ -620,38 +620,6 @@ def test_stream_stream_join_two_topics(spark, sf_dir, tmp_path):
     assert expect.exceptAll(got).count() == 0
 
 
-def test_jvm_partitioner_variant(spark, tmp_path):
-    """partitioner="xxhash64" stays JVM-side: placement is stable,
-    bounded, null keys go to partition 0, and the read-back equals the
-    input (only the placement differs from murmur2)."""
-    fk.register_filekafka(spark)
-    root = _mkroot(tmp_path)
-    fk.produce(
-        _messages(spark, 120), root, "jvm", num_partitions=4,
-        partitioner="xxhash64",
-    )
-    df = (
-        spark.read.format("filekafka")
-        .option("path", root)
-        .option("topic", "jvm")
-        .load()
-    )
-    rows = df.collect()
-    assert len(rows) == 120
-    key_pids = {}
-    for r in rows:
-        key_pids.setdefault(bytes(r["key"]), set()).add(r["partition"])
-    assert all(len(p) == 1 for p in key_pids.values())
-    assert {r["partition"] for r in rows} <= {0, 1, 2, 3}
-    vals = sorted(bytes(r["value"]).decode() for r in rows)
-    assert vals == sorted(f"v{i}" for i in range(120))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown partitioner"):
-        fk.produce(_messages(spark, 5), root, "jvm2", num_partitions=2,
-                   partitioner="bogus")
-
-
 def test_segment_compaction_and_retention(spark, tmp_path):
     """Many small produces → compaction merges to one segment per
     partition with identical contents; the crash window (merged +

@@ -162,8 +162,8 @@ def test_ann_lsh_and_ivf_recall(spark):
 
     from spark_extensions_spark.operators.similarity import (
         ann_bruteforce_topk,
-        ann_ivf_topk,
-        ann_lsh_topk,
+        ann_ivf_topk_det,
+        ann_lsh_topk_det,
     )
     from spark_extensions_spark.session import load_tables
 
@@ -180,8 +180,11 @@ def test_ann_lsh_and_ivf_recall(spark):
         return len(got & truth) / len(truth)
 
     # generous bounds: randomized structures, deterministic seeds
-    assert recall(ann_ivf_topk(*args, k=5, dim=64, n_lists=8, n_probe=4)) > 0.5
-    assert recall(ann_lsh_topk(*args, k=5, dim=64, n_planes=4)) > 0.3
+    assert (
+        recall(ann_ivf_topk_det(*args, k=5, dim=64, n_lists=8, n_probe=4))
+        > 0.5
+    )
+    assert recall(ann_lsh_topk_det(*args, k=5, dim=64, n_planes=4)) > 0.3
 
 
 def test_ann_lsh_det_buckets_and_recall(spark):
@@ -640,7 +643,7 @@ def test_embedding_ivf_neardup_recall(spark):
 
     from spark_extensions_spark.operators.dedup import (
         embedding_neardup_pairs,
-        embedding_neardup_pairs_ivf,
+        embedding_neardup_pairs_ivf_det,
     )
 
     rng = random.Random(11)
@@ -661,7 +664,7 @@ def test_embedding_ivf_neardup_recall(spark):
     }
     ivf = {
         (r.id_a, r.id_b): r.cosine
-        for r in embedding_neardup_pairs_ivf(df, n_lists=8, **kw).collect()
+        for r in embedding_neardup_pairs_ivf_det(df, n_lists=8, **kw).collect()
     }
     assert len(exact) >= 100  # the 40 groups produce >=120 true pairs
     assert set(ivf) <= set(exact)  # no false pairs (same threshold)
@@ -703,7 +706,7 @@ def test_new_operators_edge_cases(spark):
     """Empty/degenerate inputs through the round-2 operators."""
     from spark_extensions_spark.operators.dedup import (
         embedding_neardup_pairs,
-        embedding_neardup_pairs_ivf,
+        embedding_neardup_pairs_ivf_det,
     )
     from spark_extensions_spark.operators.graph import (
         connected_components_star,
@@ -720,7 +723,7 @@ def test_new_operators_edge_cases(spark):
         == 0
     )
     assert (
-        embedding_neardup_pairs_ivf(
+        embedding_neardup_pairs_ivf_det(
             one, "vec_id", "embedding", dim=2, threshold=0.5, n_lists=2
         ).count()
         == 0
@@ -821,7 +824,7 @@ def test_ann_ivfpq_recall_and_determinism(spark):
 
     from spark_extensions_spark.operators.similarity import (
         ann_bruteforce_topk,
-        ann_ivfpq_topk,
+        ann_ivfpq_topk_det,
     )
     from spark_extensions_spark.session import load_tables
 
@@ -832,7 +835,7 @@ def test_ann_ivfpq_recall_and_determinism(spark):
         (r["query_id"], r["neighbor_id"])
         for r in ann_bruteforce_topk(*args, k=5, dim=64).collect()
     }
-    out = ann_ivfpq_topk(
+    out = ann_ivfpq_topk_det(
         *args, k=5, dim=64, n_lists=8, n_probe=4, rerank=64
     )
     got = {(r["query_id"], r["neighbor_id"]) for r in out.collect()}
@@ -846,7 +849,7 @@ def test_ann_ivfpq_recall_and_determinism(spark):
     assert all(abs(c - 1.0) < 1e-9 for c in self_cos.values())
     rerun = {
         (r["query_id"], r["neighbor_id"])
-        for r in ann_ivfpq_topk(
+        for r in ann_ivfpq_topk_det(
             *args, k=5, dim=64, n_lists=8, n_probe=4, rerank=64
         ).collect()
     }

@@ -22,11 +22,12 @@ asserts both exact-set equivalence and the documented guarantees:
   is visible iff it shares ≥1 shingle with 2 ≤ df ≤ max_df, then
   verifies on FULL sets) — so the bound itself is part of the
   checked contract, not an excuse.
-- **ivf probes**: the top-k result EQUALS the brute-force replica of
-  the probe pipeline (deterministic md5 centroid sample → nearest-
-  centroid assignment → n_probe lists → cosine top-k); and the
-  recall limit — with n_probe = n_lists the result equals the exact
-  brute-force cosine top-k.
+- **ivf probes**: the deterministic IVF top-k EQUALS the pure-Python
+  integer replica of the probe pipeline (md5-picked fixed-point
+  codebook → first-minimum squared-L2 assignment → n_probe lists in
+  (distance, list id) order → cosine top-k); and the recall limit —
+  with n_probe = n_lists the result equals the exact brute-force
+  cosine top-k.
 
 Wave 2 (same round): incremental-LSH (new-batch x persisted-index
 band join, both index input shapes), SimHash (bit-majority twin incl.
@@ -41,6 +42,7 @@ Every case is seed-pinned; reproduce one standalone:
 from __future__ import annotations
 
 import hashlib
+import math
 import random
 import re
 import sys
@@ -143,8 +145,6 @@ def twin_winnow_pairs(
 def twin_containment_pairs(
     docs, n: int, max_df: int, min_shared: int, min_cont_e6: int
 ) -> set[tuple[int, int, int, int, int, int]]:
-    import math
-
     sets = {
         d: {_gram_hash(g) for g in _shingles(_tok(t), n)} for d, t in docs
     }
@@ -171,31 +171,31 @@ def twin_containment_pairs(
 
 
 def twin_ivf_topk(corpus, queries, k, n_lists, n_probe):
-    """Brute-force replica of ann_ivf_topk's probe pipeline.
+    """Brute-force replica of ann_ivf_topk_det's probe pipeline, in
+    pure-Python integer math.
 
-    Uses the same numpy expressions as the operator (same BLAS, same
-    per-dimension cosine accumulation) so float results are
-    bit-identical on the same machine."""
-    import numpy as np
+    Codebook: the ``n_lists`` corpus rows with the smallest
+    ``(md5(str(id)), id)``, quantized by ``floor(v * 1e6 + 0.5)``.
+    Each corpus vector joins the list at its first minimum exact
+    squared-L2 distance; each query probes its ``n_probe`` lists in
+    ``(distance, list id)`` order. Candidates are scored with the
+    per-dimension left-to-right cosine fold, so scores are
+    bit-identical to the operator's."""
 
-    cent_rows = sorted(corpus, key=lambda r: _md5hex(str(r[0])))[:n_lists]
-    cents = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)
-    cn = np.sqrt((cents * cents).sum(axis=1))
+    def quant(v):
+        return [math.floor(float(x) * 1e6 + 0.5) for x in v]
 
-    def nearest(vecs, n):
-        mat = np.array([list(v) for v in vecs], dtype=np.float64)
-        sims = (mat @ cents.T) / (
-            np.sqrt((mat * mat).sum(axis=1))[:, None] * cn[None, :]
-        )
-        order = np.lexsort(
-            (np.arange(sims.shape[1])[None, :].repeat(len(mat), 0), -sims)
-        )
-        return order[:, :n]
+    cent_rows = sorted(corpus, key=lambda r: (_md5hex(str(r[0])), r[0]))
+    cents = [quant(v) for _, v in cent_rows[:n_lists]]
 
-    assign = nearest([v for _, v in corpus], 1)[:, 0]
+    def dists(v):
+        qv = quant(v)
+        return [sum((a - c) * (a - c) for a, c in zip(qv, cq)) for cq in cents]
+
     by_list: dict[int, list[tuple[int, list]]] = {}
-    for (cid, cv), li in zip(corpus, assign):
-        by_list.setdefault(int(li), []).append((cid, cv))
+    for cid, cv in corpus:
+        d = dists(cv)
+        by_list.setdefault(d.index(min(d)), []).append((cid, cv))
 
     def cosine(a, b):
         dot = na = nb = 0.0
@@ -205,14 +205,15 @@ def twin_ivf_topk(corpus, queries, k, n_lists, n_probe):
             dot += ai * bi
             na += ai * ai
             nb += bi * bi
-        return dot / ((na ** 0.5) * (nb ** 0.5))
+        return dot / (math.sqrt(na) * math.sqrt(nb))
 
     out = []
-    probe = nearest([v for _, v in queries], n_probe)
-    for (qid, qv), lists in zip(queries, probe):
+    for qid, qv in queries:
+        d = dists(qv)
+        lists = sorted(range(len(cents)), key=lambda i: (d[i], i))[:n_probe]
         cands = []
         for li in lists:
-            cands.extend(by_list.get(int(li), []))
+            cands.extend(by_list.get(li, []))
         scored = sorted(
             ((cosine(qv, cv), cid) for cid, cv in cands),
             key=lambda t: (-t[0], t[1]),
@@ -403,7 +404,7 @@ def run_containment(spark, rng: random.Random) -> list[str]:
 
 
 def run_ivf(spark, rng: random.Random) -> list[str]:
-    from spark_extensions_spark.operators.similarity import ann_ivf_topk
+    from spark_extensions_spark.operators.similarity import ann_ivf_topk_det
 
     dim = rng.choice([4, 6])
     n_corpus = rng.randint(12, 30)
@@ -421,7 +422,7 @@ def run_ivf(spark, rng: random.Random) -> list[str]:
     qdf = spark.createDataFrame(queries, "qid bigint, qvec array<double>")
     got = [
         (r["query_id"], r["neighbor_id"], r["rank"], r["cosine"])
-        for r in ann_ivf_topk(
+        for r in ann_ivf_topk_det(
             cdf, qdf, "vid", "vec", "qid", "qvec",
             k=k, dim=dim, n_lists=n_lists, n_probe=n_probe,
         ).collect()
@@ -438,7 +439,7 @@ def run_ivf(spark, rng: random.Random) -> list[str]:
     gcos = {(q, nid): c for q, nid, _, c in got}
     for q, nid, _, c in want:
         gc = gcos.get((q, nid))
-        if gc is not None and abs(gc - c) > 1e-9:
+        if gc is not None and gc != c:
             problems.append(f"cosine diverges for {(q, nid)}: {gc} vs {c}")
     if full_probe:
         brute = twin_brute_topk(corpus, queries, k)

@@ -21,8 +21,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_extensions_spark.queries import registry  # noqa: E402
+from spark_extensions_spark.session import get_spark  # noqa: E402
 from tools.measure import (  # noqa: E402
-    session,
     time_noop,
     warm_up,
     worker_pyspark,
@@ -95,7 +95,7 @@ def environment(spark) -> dict:
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = session("bench")
+    spark = get_spark("bench")
     warm_up(spark, sf_dir)
 
     # De-positioned timing order (VERDICT r7 #4): time the suite in a

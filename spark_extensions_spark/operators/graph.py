@@ -34,6 +34,7 @@ fully hash-checked (see queries4.dedup_clusters).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -56,6 +57,15 @@ _ANCHORS_BROADCAST_MAX = 2_000_000
 
 def _maybe_broadcast(df: DataFrame, n_nodes: int) -> DataFrame:
     return F.broadcast(df) if n_nodes <= _BROADCAST_NODES_MAX else df
+
+
+def _persist(df: DataFrame) -> DataFrame:
+    """``df`` persisted columnar (compressed, disk-spilling), unless the
+    CacheManager already holds an equal plan — the lookup ``persist``
+    makes itself, minus its "already cached" WARN on every warm call."""
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+    return df
 
 
 def _iterate(state, step, rounds, probe=None, done=None, name=None):
@@ -87,17 +97,13 @@ def _symmetric(edges: DataFrame, src: str, dst: str, key: str):
     Persisted columnar, not checkpointed: the round-10 memory audit saw
     row-RDD checkpoint blocks (216 MiB/partition at sf1) OOM a 0.5 g/core
     session, and truncating one distinct of lineage buys nothing."""
-    from pyspark import StorageLevel
-
     from spark_extensions_spark.session import expansion_width
 
     e = canonical_edges(edges, src, dst)
-    sym = (
+    sym = _persist(
         e.unionAll(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(expansion_width(e.sparkSession), key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).repartition(expansion_width(e.sparkSession), key)
     )
     return sym, sym.select("src").distinct().count()
 
@@ -300,8 +306,6 @@ def pagerank(
     quality prior, and what makes the DuckDB oracle an exact unrolled
     CTE chain.
     """
-    from pyspark import StorageLevel
-
     # STATIC inputs persist columnar (compressed, disk-spilling) —
     # the round-10 memory audit measured the deserialized row-RDD
     # localCheckpoint blocks as the heap hog of the graph family
@@ -310,16 +314,13 @@ def pagerank(
     # Per-round RANKS need no checkpoint either: each round rebuilds
     # from the cached nodes/e_deg, so plan depth grows linearly in
     # the fixed iteration count.
-    E = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    E = _persist(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
-    nodes = (
+    nodes = _persist(
         E.select(F.col("src").alias("node"))
         .union(E.select(F.col("dst").alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = nodes.count()
     if n == 0:
@@ -341,10 +342,8 @@ def pagerank(
     # sum runs exchange-free — one exchange here replaces one per
     # round (guide §2.4). Beyond the broadcast bound the rank join
     # itself reshuffles by src and the dst layout is simply unused.
-    e_deg = (
-        E.join(outdeg, "src")
-        .repartition(expansion_width(E.sparkSession), "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    e_deg = _persist(
+        E.join(outdeg, "src").repartition(expansion_width(E.sparkSession), "dst")
     )
 
     base = (PAGERANK_SCALE * (100 - damping_pct)) // (100 * n)

@@ -10,14 +10,23 @@ deployment while staying correct on ``local[N]`` test runs:
 - ``spark.sql.session.timeZone=UTC`` — deterministic timestamp semantics
   (matches the DuckDB oracle's naive timestamps).
 - Arrow on for any pandas-UDF path.
-- Shuffle partitions pinned at 32, whatever the local core count; the
-  bench and profiling tools set ``$SPARK_GRAFT_CPUS`` instead, and a
-  real cluster deployment overrides via ``extra_conf`` (AQE coalescing
-  makes over-provisioning cheap).
+- One width rule: on a local master, shuffle partitions equal the
+  session's cores (``defaultParallelism``; ``local[N]`` → N), so the
+  bench, the profilers, the tests and the benchmark plan at the same
+  width. AQE cannot coalesce the partitions of cached plans, explicit
+  ``repartition`` calls or checkpointed round states, so a wider
+  setting only adds tasks there: each of pagerank's round jobs ran 32
+  tasks over a few thousand edges on a 4-core box. Other masters keep
+  32, and an explicit ``extra_conf`` value wins everywhere.
+- The default master is ``local[$SPARK_GRAFT_CPUS]``, else one thread
+  per core this process may run on (``os.sched_getaffinity``).
 - On a local master, every Python process Spark starts (the worker
   daemon, the Python DataSource planners, the streaming source runner)
   runs ``_boot/sitecustomize.py`` at interpreter start, through
-  ``spark.executorEnv.PYTHONPATH``. Spark puts ``pyspark.zip`` first on
+  ``spark.executorEnv.PYTHONPATH`` and, for the once-per-session
+  ``lookup_data_sources`` planner that the executorEnv does not reach,
+  the JVM's own ``PYTHONPATH``, which Spark merges into every Python
+  worker's path. Spark puts ``pyspark.zip`` first on
   a worker's path, and the zip holds no bytecode, so each fresh
   interpreter compiled pyspark: about 1 s for every streaming query's
   source runner. The hook drops Spark's archives when the installed
@@ -37,10 +46,12 @@ import os
 import shutil
 import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Defaults chosen for local[N] testing; every one of these is safe (or
 # strictly better) on a large cluster, where AQE re-derives parallelism.
+# get_spark sizes shuffle partitions to the cores on a local master.
 _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -87,6 +98,28 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+@contextlib.contextmanager
+def _jvm_pythonpath(*dirs: str):
+    """``dirs`` first on ``PYTHONPATH`` for the body of a ``with`` block,
+    which launches the JVM; the variable is put back on exit, so the
+    driver's own subprocesses see it unchanged."""
+    prev = os.environ.get("PYTHONPATH")
+    os.environ["PYTHONPATH"] = os.pathsep.join([*dirs, prev] if prev else dirs)
+    try:
+        yield
+    finally:
+        if prev is None:
+            del os.environ["PYTHONPATH"]
+        else:
+            os.environ["PYTHONPATH"] = prev
+
+
 def get_spark(
     app_name: str = "spark_extensions_spark",
     master: str | None = None,
@@ -94,12 +127,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is supplied — mirrors the driver harness.
+    ``master`` defaults to ``local[default_cpus()]`` when no cluster
+    master is supplied — mirrors the driver harness. On a local master
+    ``spark.sql.shuffle.partitions`` is the session's
+    ``defaultParallelism`` (elsewhere 32) unless ``extra_conf`` sets it.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULT_CONF)
     # local[N] runs driver + all executor threads in ONE JVM whose
@@ -122,8 +156,19 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    launch = contextlib.nullcontext()
+    if master.startswith("local") and SparkContext._gateway is None:
+        # the lookup_data_sources planner gets no executorEnv, but Spark
+        # merges the JVM's PYTHONPATH into every Python worker's path
+        launch = _jvm_pythonpath(_PACKAGE_ROOT, _BOOT_DIR)
+    with launch:
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    width = "spark.sql.shuffle.partitions"
+    if spark.sparkContext.master.startswith("local") and width not in (
+        extra_conf or {}
+    ):
+        spark.conf.set(width, str(spark.sparkContext.defaultParallelism))
     return spark
 
 

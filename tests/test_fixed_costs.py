@@ -1,8 +1,8 @@
 """Fixed costs paid on every task or query, removed without changing
 results: the start-up hook of Spark's Python processes
-(``_boot/sitecustomize.py``), the per-session parquet schema memo of
-``load_tables`` and the CDC fold's write width
-(``operators/incremental.py``)."""
+(``_boot/sitecustomize.py``), the session's shuffle width, the
+per-session parquet schema memo of ``load_tables`` and the CDC fold's
+write width (``operators/incremental.py``)."""
 
 from __future__ import annotations
 
@@ -25,7 +25,9 @@ from spark_extensions_spark.operators.incremental import (
     apply_cdc_batch,
     read_cdc_state,
 )
-from spark_extensions_spark.session import load_tables
+from spark_extensions_spark.operators.graph import pagerank
+from spark_extensions_spark.session import default_cpus, load_tables
+from tools.measure import measure
 
 
 def _jobs_started(spark, action) -> int:
@@ -128,6 +130,16 @@ def test_streaming_source_runner_imports_the_installed_pyspark(spark, tmp_path):
     _assert_installed_pyspark(pyspark_file, path)
 
 
+def test_jvm_pythonpath_reaches_the_boot_hook(spark):
+    # Spark merges the JVM's PYTHONPATH into every Python worker's path,
+    # which is how the lookup_data_sources planner gets the hook; the
+    # driver's own variable is put back after the launch
+    assert BOOT_DIR in spark._jvm.java.lang.System.getenv("PYTHONPATH").split(
+        os.pathsep
+    )
+    assert BOOT_DIR not in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+
+
 def _spark_path(root, version_py: bytes) -> list:
     """A worker-like path: Spark's three archives, a zip of other code,
     and the directory that holds the installed pyspark and py4j."""
@@ -208,6 +220,32 @@ def test_zip_directory_is_reread_only_when_the_archive_changed(
     boot.invalidate_caches(importer)
     assert reads == [archive]
     assert importer.find_spec("m2") is not None
+
+
+# --- shuffle width ---------------------------------------------------
+
+def test_local_session_width_is_its_cores(spark):
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
+        spark.sparkContext.defaultParallelism
+    )
+
+
+def test_default_master_takes_the_affinity_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+
+
+def test_warm_pagerank_runs_no_job_wider_than_the_cores(spark):
+    edges = spark.createDataFrame(
+        [(i, (7 * i + 1) % 40) for i in range(120)], "src long, dst long"
+    )
+    measure(spark, lambda: pagerank(edges))
+    warm = measure(spark, lambda: pagerank(edges))
+    assert warm.jobs
+    widest = max(j["tasks"] for j in warm.jobs)
+    assert widest <= spark.sparkContext.defaultParallelism, warm.jobs
 
 
 # --- load_tables schema memo ------------------------------------------

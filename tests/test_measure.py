@@ -8,7 +8,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.measure import measure  # noqa: E402
+from tools.measure import JobStore, measure  # noqa: E402
 
 
 def test_measure_reads_jobs_with_ui_off(spark):
@@ -16,6 +16,13 @@ def test_measure_reads_jobs_with_ui_off(spark):
     assert len(run.jobs) >= 1
     assert 0 <= run.job_s <= run.wall
     assert spark.conf.get("spark.ui.enabled") == "false"
+
+
+def test_a_stage_the_store_dropped_reads_as_none(spark):
+    store = JobStore(spark)
+    assert store.stage(2**31 - 1) is None
+    run = measure(spark, lambda: spark.range(10).selectExpr("sum(id) AS s"))
+    assert run.total("stages") >= 1
 
 
 def test_bench_line_records_its_environment(spark):

@@ -23,7 +23,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_extensions_spark.queries import registry  # noqa: E402
-from tools.measure import session, time_noop, warm_up  # noqa: E402
+from spark_extensions_spark.session import get_spark  # noqa: E402
+from tools.measure import time_noop, warm_up  # noqa: E402
 
 
 def main() -> int:
@@ -41,7 +42,7 @@ def main() -> int:
     qs = registry()
     for start in range(0, len(qs), chunk):
         batch = qs[start : start + chunk]
-        spark = session(f"bench_full_{start}")
+        spark = get_spark(f"bench_full_{start}")
         warm_up(spark, sf_dir)
         for q in batch:
             try:

@@ -1,8 +1,9 @@
 """The one timing discipline shared by bench.py and the profiling tools.
 
-- :func:`session` builds the engine session at the bench's plan width
-  (``spark.sql.shuffle.partitions=$SPARK_GRAFT_CPUS``), so a profile
-  measures the same plan the bench times.
+- The session is ``get_spark``'s, whose one width rule (shuffle
+  partitions = the session's cores) holds for the bench, the profilers,
+  the tests and the benchmark alike, so a profile measures the same
+  plan the bench times. :data:`CPUS` is its default core count.
 - :func:`warm_up` absorbs JVM/codegen, data-page, Python-worker and
   streaming start-up before anything is timed.
 - :func:`time_noop` builds a query and sinks it to ``noop``; wall seconds.
@@ -13,26 +14,20 @@
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
+
+from py4j.protocol import Py4JJavaError
 
 from perfbench.tracing import StatusStore, _opt_ms, union_seconds
 from spark_extensions_spark.session import (
     ALL_TABLES,
-    get_spark,
+    default_cpus,
     load_tables,
     scratch_dir,
 )
 
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
-def session(app: str):
-    # Size shuffle width to the bench machine: the suite's per-query cost
-    # at bench SF is dominated by task scheduling, and AQE re-derives
-    # parallelism from data size on a real cluster anyway.
-    return get_spark(app, extra_conf={"spark.sql.shuffle.partitions": CPUS})
+CPUS = default_cpus()
 
 
 def worker_pyspark(spark) -> str:
@@ -67,12 +62,12 @@ def warm_up(spark, sf_dir: str) -> None:
         t.write.format("noop").mode("overwrite").save()
     # spin up the Python/Arrow UDF worker pool once: the first
     # pandas-UDF query otherwise pays worker-fork + Arrow codec init
-    # for all 32 cores (observed as a spurious 2-3x on whichever
+    # for every core (observed as a spurious 2-3x on whichever
     # pandas query runs first in registry order)
     import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
-    spark.range(int(CPUS) * 4).repartition(int(CPUS)).mapInPandas(
+    spark.range(CPUS * 4).repartition(CPUS).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
     # and the streaming machinery (checkpoint manager, state store
@@ -108,6 +103,19 @@ def time_noop(build) -> float:
 class JobStore(StatusStore):
     """Per-job rows read from the session's status store."""
 
+    def stage(self, stage_id: int):
+        """The stage's last attempt, or ``None`` once the store dropped it.
+        Past ``spark.ui.retainedStages`` the store evicts the stages with
+        the oldest completion time, and a skipped stage has none, so the
+        skipped stages of a job that just ended can already be gone."""
+        try:
+            return self._store.lastStageAttempt(stage_id)
+        except Py4JJavaError as e:
+            name = e.java_exception.getClass().getName()
+            if name != "java.util.NoSuchElementException":
+                raise
+            return None
+
     def job_rows(self, job_id: int) -> list[dict]:
         """One row per job with an id above ``job_id``, oldest first;
         skipped stages count nowhere."""
@@ -127,8 +135,8 @@ class JobStore(StatusStore):
             )
             ids = j.stageIds()
             for sid in (ids.apply(k) for k in range(ids.size())):
-                s = self._store.lastStageAttempt(sid)
-                if s.status().toString() == "SKIPPED":
+                s = self.stage(sid)
+                if s is None or s.status().toString() == "SKIPPED":
                     continue
                 row["stages"] += 1
                 row["shuffle_read"] += s.shuffleReadBytes()

@@ -35,9 +35,9 @@ sys.path.insert(0, ROOT)
 
 from perfbench.tracing import MIB  # noqa: E402
 from spark_extensions_spark.queries import registry  # noqa: E402
+from spark_extensions_spark.session import get_spark  # noqa: E402
 from tools.measure import (  # noqa: E402
     measure,
-    session,
     warm_up,
     worker_pyspark,
 )
@@ -58,7 +58,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     by_name = {q.name: q for q in registry()}
-    spark = session("profile")
+    spark = get_spark("profile")
     warm_up(spark, sf_dir)
     print(
         f"master {spark.sparkContext.master}, sf_dir {sf_dir}, "

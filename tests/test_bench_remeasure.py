@@ -87,9 +87,15 @@ def test_remeasure_absorbs_synthetic_contention(spark):
     if not 0.3 < t_idle < 10.0:
         pytest.skip(f"workload mis-sized for this machine ({t_idle}s)")
 
+    # Three spinners per thread the cores or the query's tasks can run,
+    # so the tasks keep at most about a quarter of the CPU they had idle.
+    # Two per core left a local[8] session on 4 cores half of it: the
+    # query ran 1.8-1.9x slower, under the 2x gate, and the test skipped
+    # itself about half the time.
+    threads = max(os.cpu_count() or 8, spark.sparkContext.defaultParallelism)
     procs = [
         multiprocessing.Process(target=_spin, args=(time.time() + 120,))
-        for _ in range(2 * (os.cpu_count() or 8))
+        for _ in range(3 * threads)
     ]
     for p in procs:
         p.start()

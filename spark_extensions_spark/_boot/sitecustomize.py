@@ -1,6 +1,6 @@
 """Run at start by each Python process of a local-master ``get_spark`` session
-(``spark.executorEnv.PYTHONPATH``): imports skip Spark's archives, which hold
-no bytecode (:func:`trim`), and tasks skip re-reading unchanged zips."""
+(the JVM's ``PYTHONPATH``): imports skip Spark's archives, which hold no
+bytecode (:func:`trim`), and tasks skip re-reading unchanged zips."""
 import fnmatch, importlib.util, os, sys, zipimport
 from importlib.machinery import PathFinder
 _SPARK_ARCHIVES = ("pyspark.zip", "py4j-*-src.zip", "spark-core_*.jar")

@@ -22,11 +22,10 @@ deployment while staying correct on ``local[N]`` test runs:
   per core this process may run on (``os.sched_getaffinity``).
 - On a local master, every Python process Spark starts (the worker
   daemon, the Python DataSource planners, the streaming source runner)
-  runs ``_boot/sitecustomize.py`` at interpreter start, through
-  ``spark.executorEnv.PYTHONPATH`` and, for the once-per-session
-  ``lookup_data_sources`` planner that the executorEnv does not reach,
-  the JVM's own ``PYTHONPATH``, which Spark merges into every Python
-  worker's path. Spark puts ``pyspark.zip`` first on
+  can import this package and runs ``_boot/sitecustomize.py`` at
+  interpreter start: ``get_spark`` launches the JVM with both on its
+  ``PYTHONPATH``, which Spark merges into every Python worker's path.
+  Spark puts ``pyspark.zip`` first on
   a worker's path, and the zip holds no bytecode, so each fresh
   interpreter compiled pyspark: about 1 s for every streaming query's
   source runner. The hook drops Spark's archives when the installed
@@ -146,20 +145,15 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
-        # every Python process Spark starts can import this package
-        # whatever the driver's cwd, and runs _boot/sitecustomize.py
-        conf.setdefault(
-            "spark.executorEnv.PYTHONPATH",
-            os.pathsep.join([_PACKAGE_ROOT, _BOOT_DIR]),
-        )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     launch = contextlib.nullcontext()
     if master.startswith("local") and SparkContext._gateway is None:
-        # the lookup_data_sources planner gets no executorEnv, but Spark
-        # merges the JVM's PYTHONPATH into every Python worker's path
+        # Spark merges the JVM's PYTHONPATH into every Python worker's
+        # path: each one can import this package whatever the driver's
+        # cwd, and runs _boot/sitecustomize.py
         launch = _jvm_pythonpath(_PACKAGE_ROOT, _BOOT_DIR)
     with launch:
         spark = builder.getOrCreate()

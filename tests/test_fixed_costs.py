@@ -132,8 +132,8 @@ def test_streaming_source_runner_imports_the_installed_pyspark(spark, tmp_path):
 
 def test_jvm_pythonpath_reaches_the_boot_hook(spark):
     # Spark merges the JVM's PYTHONPATH into every Python worker's path,
-    # which is how the lookup_data_sources planner gets the hook; the
-    # driver's own variable is put back after the launch
+    # which is how each Python process Spark starts gets the package and
+    # the hook; the driver's own variable is put back after the launch
     assert BOOT_DIR in spark._jvm.java.lang.System.getenv("PYTHONPATH").split(
         os.pathsep
     )

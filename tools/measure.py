@@ -3,7 +3,7 @@
 - The session is ``get_spark``'s, whose one width rule (shuffle
   partitions = the session's cores) holds for the bench, the profilers,
   the tests and the benchmark alike, so a profile measures the same
-  plan the bench times. :data:`CPUS` is its default core count.
+  plan the bench times.
 - :func:`warm_up` absorbs JVM/codegen, data-page, Python-worker and
   streaming start-up before anything is timed.
 - :func:`time_noop` builds a query and sinks it to ``noop``; wall seconds.
@@ -20,14 +20,7 @@ from dataclasses import dataclass
 from py4j.protocol import Py4JJavaError
 
 from perfbench.tracing import StatusStore, _opt_ms, union_seconds
-from spark_extensions_spark.session import (
-    ALL_TABLES,
-    default_cpus,
-    load_tables,
-    scratch_dir,
-)
-
-CPUS = default_cpus()
+from spark_extensions_spark.session import ALL_TABLES, load_tables, scratch_dir
 
 
 def worker_pyspark(spark) -> str:
@@ -67,7 +60,8 @@ def warm_up(spark, sf_dir: str) -> None:
     import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
-    spark.range(CPUS * 4).repartition(CPUS).mapInPandas(
+    cores = spark.sparkContext.defaultParallelism
+    spark.range(cores * 4).repartition(cores).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
     # and the streaming machinery (checkpoint manager, state store
@@ -104,10 +98,10 @@ class JobStore(StatusStore):
     """Per-job rows read from the session's status store."""
 
     def stage(self, stage_id: int):
-        """The stage's last attempt, or ``None`` once the store dropped it.
-        Past ``spark.ui.retainedStages`` the store evicts the stages with
-        the oldest completion time, and a skipped stage has none, so the
-        skipped stages of a job that just ended can already be gone."""
+        """The stage's last attempt, or ``None`` once the store dropped it:
+        past ``spark.ui.retainedStages`` it evicts the stages with the
+        oldest completion time, which can include the early stages of a
+        job that just ended."""
         try:
             return self._store.lastStageAttempt(stage_id)
         except Py4JJavaError as e:
@@ -117,8 +111,10 @@ class JobStore(StatusStore):
             return None
 
     def job_rows(self, job_id: int) -> list[dict]:
-        """One row per job with an id above ``job_id``, oldest first;
-        skipped stages count nowhere."""
+        """One row per job with an id above ``job_id``, oldest first.
+        Skipped stages count nowhere; ``missing`` counts the stages the
+        store no longer holds, skipped or not, whose bytes are therefore
+        not in the row."""
         rows = []
         for j in self._newest_first():
             if j.jobId() <= job_id:
@@ -131,12 +127,15 @@ class JobStore(StatusStore):
                 tasks=j.numCompletedTasks(),
                 desc=desc.get() if desc.isDefined() else j.name(),
                 stages=0, shuffle_read=0, shuffle_write=0,
-                memory_spill=0, disk_spill=0,
+                memory_spill=0, disk_spill=0, missing=0,
             )
             ids = j.stageIds()
             for sid in (ids.apply(k) for k in range(ids.size())):
                 s = self.stage(sid)
-                if s is None or s.status().toString() == "SKIPPED":
+                if s is None:
+                    row["missing"] += 1
+                    continue
+                if s.status().toString() == "SKIPPED":
                     continue
                 row["stages"] += 1
                 row["shuffle_read"] += s.shuffleReadBytes()

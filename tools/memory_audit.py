@@ -38,8 +38,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_extensions_spark.queries import registry  # noqa: E402
-from spark_extensions_spark.session import get_spark  # noqa: E402
-from tools.measure import CPUS, JobStore, measure  # noqa: E402
+from spark_extensions_spark.session import default_cpus, get_spark  # noqa: E402
+from tools.measure import JobStore, measure  # noqa: E402
 
 # the largest-state families: window frames, collect_list/listagg,
 # graph fixed-rounds, ANN codebooks/kmeans, pack/chunk, CDC fold,
@@ -126,7 +126,7 @@ def main() -> int:
     summary = {
         "sf_dir": sf_dir,
         "driver_memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        "cpus": CPUS,
+        "cpus": default_cpus(),
         "n_ok": sum(1 for r in results if r["err"] is None),
         "n_err": sum(1 for r in results if r["err"] is not None),
         "rows": results,

@@ -82,7 +82,7 @@ def main() -> int:
                 continue
             print(
                 f"  {j['seconds']:7.3f}s  tasks={j['tasks']:4d} "
-                f"stages={j['stages']:2d}  shuffle r/w "
+                f"stages={j['stages']:2d}  missing={j['missing']}  shuffle r/w "
                 f"{j['shuffle_read'] / MIB:.1f}/{j['shuffle_write'] / MIB:.1f}"
                 f" MiB  spill {j['disk_spill'] / MIB:.1f} MiB  "
                 f"{' '.join(j['desc'].split())[:80]}"
